@@ -10,14 +10,14 @@ expressed as plain DataFrame algebra over the engine's own primitives.
 
 Per refresh of source range ``(v0, v1]`` the cost is O(changed data):
 
-* ``read_changes(v0, v1)`` — manifest-driven, the range's delta files
-  only — yields the CHANGED KEYS;
-* the keys' buckets are re-read at both versions (manifest-pruned
-  ``read_live``, restricted to the touched buckets and semi-joined to the
-  keys) — old state decrements, new state increments. Diffing full
-  before/after states (not the range's winner rows) is what makes the
-  fold correct under ANY sequencing: a changed key's final value is the
-  LWW across all generations, which the range's own winners need not be;
+* ONE projected scan (key, order, op, dims, measures) of the change rows
+  (``read_changes(v0, v1)``, the range's delta files) plus the raw v0
+  generations of the buckets those files landed in (named by the
+  manifests, no Spark job), and ONE keyed aggregate: per changed key the
+  LWW winner of all rows is its v1 state (increment), that of the v0
+  rows alone its v0 state (decrement). Diffing full before/after states
+  (not the range's winner rows) keeps the fold correct under ANY
+  sequencing: a key's final value is the LWW across all generations;
 * the signed contributions aggregate to one tiny delta frame, which
   merges (full outer, null-safe on dims) into the view's current rows for
   the affected dim groups only — groups whose count reaches zero become
@@ -39,6 +39,7 @@ groups.
 from __future__ import annotations
 
 import functools
+import json
 import operator
 from pathlib import Path
 
@@ -56,17 +57,22 @@ def _source_col_type(source: SnapshotTable, name: str) -> str:
     or dim columns as string would make ``key_bucket()``/``lookup()`` cast
     integer literals to string and hash into the wrong bucket until the
     first real fold overwrote the registry."""
-    import json as _json
-
     sch = (source.latest() or {}).get("schema")
     if sch:
         try:
-            for f in T.StructType.fromJson(_json.loads(sch)).fields:
+            for f in T.StructType.fromJson(json.loads(sch)).fields:
                 if f.name == name:
                     return f.dataType.simpleString()
         except (ValueError, KeyError, TypeError):
             pass
     return "string"
+
+
+def _cursor(view_table: SnapshotTable) -> int:
+    lin = view_table.lineage_log()
+    return max((int(d["source_version"]) for d in lin.values()
+                if isinstance(d, dict) and "source_version" in d), default=-1)
+
 
 _DEC = "decimal(28,4)"
 
@@ -90,13 +96,10 @@ class IncrementalAggView:
         """Highest source version folded in (-1 = nothing yet), recovered
         from commit lineage — the latest fold's manifest always survives
         retention, so the cursor does."""
-        lin = self.table.lineage_log()
-        return max((int(d["source_version"]) for d in lin.values()
-                    if isinstance(d, dict) and "source_version" in d),
-                   default=-1)
+        return _cursor(self.table)
 
     # ------------------------------------------------------------ refresh
-    def _signed(self, df: DataFrame, sign: int) -> DataFrame:
+    def _signed(self, df: DataFrame, sign) -> DataFrame:
         cols = [F.col(d) for d in self.dims] + [F.lit(sign).alias("_w")]
         for c in self.sum_cols:
             cols.append(F.col(c).cast("decimal(18,4)").alias(c))
@@ -112,14 +115,32 @@ class IncrementalAggView:
                         .alias(f"cnt_{c}"))
         return signed.groupBy(*self.dims).agg(*aggs)
 
-    def _changed_key_state(self, spark: SparkSession, version: int,
-                           buckets: list[int], keys: DataFrame) -> DataFrame | None:
-        if version < 0:
-            return None
-        st = self.source.read_live(spark, buckets=buckets, version=version)
-        if st is None:
-            return None
-        return st.join(keys, on=self.source.key_cols, how="left_semi")
+    def _changed_contributions(self, ch: DataFrame,
+                               old: DataFrame | None) -> DataFrame:
+        """+1 per changed key's v1 winner, -1 per its v0 winner (tombstones
+        count nothing), from ONE keyed aggregate over the change rows (tag
+        1) and the touched buckets' raw v0 generations (tag 0)."""
+        key = self.source.key_cols
+        frames = [ch] if old is None else [ch, old]
+        tb = ("event_id" if any("event_id" in d.columns for d in frames)
+              else "seq_no")
+        pay = list(dict.fromkeys(["op", *self.dims, *self.sum_cols]))
+        need = list(dict.fromkeys([*key, "seq_no", tb, *pay]))
+        # a column the rows predate (added after v0, or not yet) is null
+        rows = functools.reduce(DataFrame.unionByName, [
+            d.select(*[F.col(c) if c in d.columns else F.lit(None).alias(c)
+                       for c in need], F.lit(t).alias("_t"))
+            for t, d in zip((1, 0), frames)])
+        payload, order = F.struct(*pay), F.struct("seq_no", tb)
+        was = F.col("_t") == 0
+        win = rows.groupBy(*key).agg(
+            F.max("_t").alias("_t"), F.max_by(payload, order).alias("_n"),
+            F.max_by(F.when(was, payload), F.when(was, order)).alias("_o"))
+        c = F.explode(F.array(*[F.struct(F.lit(w).alias("_w"), F.col(s).alias("r"))
+                                for w, s in ((1, "_n"), (-1, "_o"))]))
+        return self._signed(win.filter("_t = 1").select(c.alias("c"))
+                            .filter(F.col("c.r.op") != "D")
+                            .select("c._w", "c.r.*"), F.col("_w"))
 
     def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
         """Fold source versions ``(cursor, to_version]`` into the view.
@@ -144,44 +165,27 @@ class IncrementalAggView:
         batch_id = max(self.table.committed_batches(), default=-1) + 1
         lineage = {"source_version": v1, "since_version": v0}
 
+        signed = None  # stays None on a compaction-only range: cursor only
         try:
             ch = src.read_changes(spark, since_version=v0, to_version=v1)
-            bootstrap = False
         except ValueError:
             if v0 >= 0:
                 raise  # incremental hole: the feed between folds was vacuumed
-            ch, bootstrap = None, True
-        keys = None
-        if bootstrap:
-            new = src.read_live(spark, version=v1)
-            parts = [] if new is None else [self._signed(new, 1)]
-        elif ch is None:
-            parts = []  # compaction-only range: just advance the cursor
-        else:
-            # keys feed both state reads; persist so the feed scans once
-            keys = ch.select(*src.key_cols).distinct().persist()
-            src_buckets = sorted(
-                r["b"] for r in keys.select(
-                    bucket_expr(src.key_cols, src.n_buckets).alias("b"))
-                .distinct().collect())
-            new = self._changed_key_state(spark, v1, src_buckets, keys)
-            old = self._changed_key_state(spark, v0, src_buckets, keys)
+            ch, new = None, src.read_live(spark, version=v1)  # bootstrap
+            signed = None if new is None else self._signed(new, 1)
+        if ch is not None:
+            old = (src.read(spark, buckets=src.changed_buckets(v0, v1),
+                            version=v0) if v0 >= 0 else None)
             if old is None and v0 >= 0 and src.manifest_at(v0) is None:
-                # the cursor version itself was vacuumed: read_changes can
-                # still satisfy (v0, v1] (it only needs the deltas AFTER
-                # v0) but the old-state decrement is gone — silently
-                # skipping it would ADD each changed key's new contribution
-                # on top of its old one (permanent double count)
-                keys.unpersist()
+                # the cursor version itself was vacuumed: the feed after
+                # it survives but the old-state decrement is gone — adding
+                # only the new contributions would double count for good
                 raise ValueError(
                     f"incremental refresh: cursor version {v0} was vacuumed "
                     "from the source — the view cannot subtract the prior "
                     "state; rebuild the view or vacuum after refreshing")
-            parts = [self._signed(d, s) for d, s in ((new, 1), (old, -1))
-                     if d is not None]
-        if not parts:
-            if keys is not None:
-                keys.unpersist()  # the early return skips the finally below
+            signed = self._changed_contributions(ch, old)
+        if signed is None:
             # carry the recorded schema forward: an empty fold must not
             # re-stamp the view's key column types (point lookups hash by
             # the stored schema — see table.key_bucket)
@@ -189,7 +193,6 @@ class IncrementalAggView:
                 self._empty_commit_frame(spark), batch_id, lineage=lineage,
                 schema_json=(self.table.latest() or {}).get("schema"))
             return True
-        signed = functools.reduce(lambda a, b: a.unionByName(b), parts)
         # delta drives the bucket-id collect AND the merge write — persist
         # so its O(changed-bucket state) upstream computes once
         delta = self._agg(signed).persist()
@@ -237,8 +240,6 @@ class IncrementalAggView:
             self.table.commit_delta_auto(merged, batch_id, lineage=lineage)
         finally:
             delta.unpersist()
-            if keys is not None:
-                keys.unpersist()
         return True
 
     def _measure_types(self) -> list[tuple[str, str]]:
@@ -314,10 +315,7 @@ class SCD2View:
 
     @property
     def cursor(self) -> int:
-        lin = self.table.lineage_log()
-        return max((int(d["source_version"]) for d in lin.values()
-                    if isinstance(d, dict) and "source_version" in d),
-                   default=-1)
+        return _cursor(self.table)
 
     def _version_struct(self, df: DataFrame) -> F.Column:
         src = self.source

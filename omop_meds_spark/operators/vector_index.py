@@ -160,12 +160,25 @@ class IVFIndexView:
     def _codebook_path(self) -> Path:
         return self.root / _CODEBOOK_FILE
 
+    def _codebook_doc(self) -> dict | None:
+        """The stored codebook document — None only when the file is
+        absent; a file that does not parse as one raises."""
+        try:
+            text = self._codebook_path.read_text()
+        except FileNotFoundError:
+            return None
+        try:
+            doc = json.loads(text)
+            if isinstance(doc, dict) and isinstance(doc["centroids"], list):
+                return doc
+        except (ValueError, KeyError):
+            pass
+        raise ValueError(f"IVFIndexView: corrupt codebook {self._codebook_path}")
+
     def codebook(self) -> list[list[int]] | None:
         """cid-ordered quantized centroid vectors (None before build())."""
-        try:
-            return json.loads(self._codebook_path.read_text())["centroids"]
-        except (OSError, ValueError, KeyError):
-            return None
+        doc = self._codebook_doc()
+        return None if doc is None else doc["centroids"]
 
     def _codebook_df(self, spark: SparkSession, cents: list[list[int]]):
         return _cents_df(spark, cents)
@@ -223,11 +236,9 @@ class IVFIndexView:
         live corpus, so a source delete sitting between the cursor and
         head would otherwise survive as a stale live index row."""
         self.refresh(spark)
-        try:  # re-pick with the same method the index was built with
-            method = json.loads(self._codebook_path.read_text()).get(
-                "method", "first_k")
-        except (OSError, ValueError):
-            method = "first_k"
+        # re-pick with the same method the index was built with
+        doc = self._codebook_doc()
+        method = "first_k" if doc is None else doc.get("method", "first_k")
         self._codebook_path.unlink(missing_ok=True)
         n = self.build(spark, method=method)
         live = self.source.read_live(spark)

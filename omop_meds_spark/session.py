@@ -44,6 +44,12 @@ def get_spark(
         # cores input partitions (scan parallelism bounds batch scaling)
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.session.timeZone", "UTC")
+        # every table read names its files from the manifest; above 32
+        # paths Spark would launch a parallel listing job just to stat
+        # them, so keep that listing on the driver for any file count
+        # the engine reads
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1000000")
         # INT96 (the legacy default) carries NO parquet column statistics,
         # which blinds zone-map file skipping and row-group pruning on
         # every timestamp column; standard int64 micros is what Iceberg /

@@ -127,6 +127,84 @@ def bucket_expr(key_cols: list[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
+                           0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
+                           0x27D4EB2F165667C5)
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit seed and result) — the digest
+    Spark's ``xxhash64`` chains column by column."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+# integral widths Spark hashes as 4-byte ints vs 8-byte longs
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "boolean": 1,
+             "bigint": 64}
+
+
+def spark_xxhash64(values: list, types: list[str]) -> int | None:
+    """Spark's ``xxhash64(*cols)`` (seed 42, signed result) of one row of
+    literals, computed in Python — or None when a value's Python type does
+    not match its Spark type (``types``: simple type strings) exactly, so
+    only Spark's own cast can say what it hashes to. Strings hash their
+    UTF-8 bytes; boolean/tinyint/smallint/int a 4-byte and bigint an
+    8-byte little-endian integer; nulls are skipped."""
+    h = 42
+    for v, t in zip(values, types):
+        if v is None:
+            continue
+        if t == "string" and isinstance(v, str):
+            data = v.encode("utf-8")
+        elif t in _INT_BITS and isinstance(v, int) and (
+                isinstance(v, bool) == (t == "boolean")):
+            bits = _INT_BITS[t]
+            if bits > 1 and not -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+                return None
+            data = int(v).to_bytes(8 if bits == 64 else 4, "little", signed=True)
+        else:
+            return None
+        h = _xxh64(data, h)
+    return h - (1 << 64) if h >> 63 else h
+
+
 def zorder_value(quantized: list[F.Column], bits: int = 16) -> F.Column:
     """Interleave the low ``bits`` bits of each quantized column into one
     Z-value (Morton code): sorting by it clusters rows so that CONTIGUOUS
@@ -1046,27 +1124,8 @@ class SnapshotTable:
         raise unless ``ignore_cow=True`` (the merge-on-read hot path never
         produces them). Returns None when the range holds no changes.
         Raises on a range whose manifests were vacuumed away."""
-        head = self.version
-        to_version = head if to_version is None else to_version
-        if since_version >= to_version:
-            return None
-        if to_version > head:
-            raise ValueError(
-                f"read_changes: to_version {to_version} is beyond head {head}")
-        entries = [(v, k, p) for v, k, p in self._raw_log_entries()
-                   if since_version < v <= to_version]
-        # versions are contiguous by construction — a hole means vacuum
-        # retired part of the range; silently skipping it would drop changes
-        missing = set(range(since_version + 1, to_version + 1)) - {
-            v for v, _, _ in entries}
-        if missing:
-            raise ValueError(
-                f"read_changes: versions {sorted(missing)} in "
-                f"({since_version}, {to_version}] are no longer in the log "
-                f"(vacuumed)")
         parts: list[DataFrame] = []
-        for v, _, p in entries:
-            d = json.loads(p.read_text())
+        for v, d in self._change_manifests(since_version, to_version):
             adds = [str(self.root / f) for fs in d.get("files_add", {}).values()
                     for f in fs]
             if (not adds and d.get("commit") is not None
@@ -1091,6 +1150,46 @@ class SnapshotTable:
             out = out.unionByName(df, allowMissingColumns=True)
         return out
 
+    def _change_manifests(self, since_version: int,
+                          to_version: int | None) -> list[tuple[int, dict]]:
+        """(version, manifest) of every commit in ``(since_version,
+        to_version]`` — what the change feed walks. Raises on a range
+        beyond the head or one whose manifests were vacuumed away."""
+        head = self.version
+        to_version = head if to_version is None else to_version
+        if since_version >= to_version:
+            return []
+        if to_version > head:
+            raise ValueError(
+                f"read_changes: to_version {to_version} is beyond head {head}")
+        entries = [(v, p) for v, _, p in self._raw_log_entries()
+                   if since_version < v <= to_version]
+        # versions are contiguous by construction — a hole means vacuum
+        # retired part of the range; silently skipping it would drop changes
+        missing = set(range(since_version + 1, to_version + 1)) - {
+            v for v, _ in entries}
+        if missing:
+            raise ValueError(
+                f"read_changes: versions {sorted(missing)} in "
+                f"({since_version}, {to_version}] are no longer in the log "
+                f"(vacuumed)")
+        return [(v, json.loads(p.read_text())) for v, p in entries]
+
+    def changed_buckets(self, since_version: int,
+                        to_version: int | None = None) -> list[int] | None:
+        """The buckets that commits in ``(since_version, to_version]``
+        added files to — where every row of ``read_changes`` over the same
+        range lives — from the manifests alone, with no Spark job. None
+        when a commit in the range was written under another bucket
+        layout (a rebucket in between), whose ids do not address this
+        one. Raises like ``read_changes`` on a vacuumed range."""
+        out: set[int] = set()
+        for _, d in self._change_manifests(since_version, to_version):
+            if int(d.get("n_buckets", self.n_buckets)) != self.n_buckets:
+                return None
+            out.update(int(b) for b in d.get("files_add", {}))
+        return sorted(out)
+
     def _raw_log_entries(self) -> list[tuple[int, str, Path]]:
         """Like ``_log_entries`` but prefers the DELTA manifest when a
         version exists as both (post-hoc checkpoint promotion keeps the
@@ -1107,19 +1206,19 @@ class SnapshotTable:
         return [(v, k, p) for v, (k, p) in sorted(seen.items())]
 
     def key_bucket(self, spark: SparkSession, key: dict) -> int:
-        """The bucket that owns ``key`` (one tiny driver-local job — the
-        hash must be Spark's own xxhash64, bit-for-bit). When the table
-        recorded a schema, the key literals are cast to the stored key
-        column types first: xxhash64(int32) != xxhash64(int64), so Python
+        """The bucket that owns ``key`` — Spark's own xxhash64, bit-for-bit.
+        When the table recorded a schema, the key literals take the stored
+        key column types: xxhash64(int32) != xxhash64(int64), so Python
         type inference alone would silently hash into the wrong bucket
-        for narrow integer keys. Point lookups then read 1/n_buckets of
+        for narrow integer keys. String, integral and boolean keys hash on
+        the driver with no Spark job (``spark_xxhash64``); any other key,
+        or a literal that needs a cast to its stored type, goes through a
+        one-row Spark probe. Point lookups then read 1/n_buckets of
         the table: ``t.read_live(spark, buckets=[t.key_bucket(spark,
         k)])`` plus an equality filter that parquet pushes down."""
         missing = [c for c in self.key_cols if c not in key]
         if missing:
             raise ValueError(f"key_bucket: missing key columns {missing}")
-        df = spark.createDataFrame([tuple(key[c] for c in self.key_cols)],
-                                   schema=self.key_cols)
         m = self._load_state()
         if (m is None or not m.get("schema")) and any(
                 isinstance(key[c], int) for c in self.key_cols):
@@ -1128,11 +1227,23 @@ class SnapshotTable:
                 "integer components — type inference (bigint) may hash into "
                 "the wrong bucket if the stored key column is narrower",
                 stacklevel=2)
+        types = {}
         if m is not None and m.get("schema"):
             from pyspark.sql.types import StructType
 
             types = {f.name: f.dataType
                      for f in StructType.fromJson(json.loads(m["schema"])).fields}
+        vals = [key[c] for c in self.key_cols]
+        # no recorded type: what createDataFrame would infer
+        h = spark_xxhash64(vals, [
+            types[c].simpleString() if c in types else
+            "boolean" if isinstance(v, bool) else
+            "bigint" if isinstance(v, int) else "string"
+            for c, v in zip(self.key_cols, vals)])
+        if h is not None:
+            return h % self.n_buckets
+        df = spark.createDataFrame([tuple(vals)], schema=self.key_cols)
+        if types:
             for c in self.key_cols:
                 if c in types:
                     df = df.withColumn(c, F.col(c).cast(types[c]))

@@ -161,3 +161,69 @@ def test_out_of_range_winner_poison_case(spark, tmpdir_path):
     view.refresh(spark)
     assert _view_rows(spark, view) == _recompute(spark, tbl) == {
         ("early", 1, 1.0)}
+
+
+def test_fold_across_source_compaction(spark, tmpdir_path):
+    """A source ``compact()`` between two folds rewrites every bucket into
+    one generation: the next fold reads the pre-compaction generations at
+    its cursor and still lands on the recompute."""
+    tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=4)
+    view = IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"],
+                              sum_cols=["val"])
+    _commit(spark, tbl, 0, [(f"k{i}", f"g{i % 3}", float(i), i, "U")
+                            for i in range(12)])
+    assert view.refresh(spark)
+    _commit(spark, tbl, 1, [("k0", "g2", 5.0, 20, "U"),
+                            ("k1", "g0", None, 21, "D")])
+    assert tbl.compact(spark)
+    _commit(spark, tbl, 2, [("k2", "g9", 7.5, 22, "U"),
+                            ("k0", "g1", 1.0, 23, "U")])
+    assert view.refresh(spark)
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+    assert tbl.compact(spark)  # a compaction-only range just moves the cursor
+    assert view.refresh(spark)
+    assert view.cursor == tbl.version
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+
+
+def test_sum_col_added_after_cursor(spark, tmpdir_path):
+    """The measure column first appears in a commit after the view's
+    cursor: the view's earlier folds and the old-state rows read it as
+    null, and the fold still equals the recompute."""
+    tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=4)
+    view = IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"],
+                              sum_cols=["val"])
+    first = spark.createDataFrame(
+        [(f"k{i}", f"g{i % 2}", i, "U") for i in range(6)],
+        "k string, grp string, seq_no long, op string")
+    assert tbl.commit_delta_auto(first, 0) is not None
+    assert view.refresh(spark)
+    assert _view_rows(spark, view) == {("g0", 3, None), ("g1", 3, None)}
+    _commit(spark, tbl, 1, [("k0", "g1", 2.5, 10, "U"),
+                            ("k7", "g0", 4.0, 11, "U"),
+                            ("k3", "g1", None, 12, "D")])
+    assert view.refresh(spark)
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+
+
+def test_vacuumed_cursor_version_raises(spark, tmpdir_path):
+    """Vacuum retires the view's cursor version while the deltas after it
+    survive: the fold cannot subtract the prior state, so it raises and
+    leaves the view as it was."""
+    import pytest
+
+    tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=2)
+    view = IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"],
+                              sum_cols=["val"])
+    _commit(spark, tbl, 0, [("k1", "a", 1.0, 1, "U"), ("k2", "b", 2.0, 2, "U")])
+    assert view.refresh(spark)
+    before = _recompute(spark, tbl)
+    assert _view_rows(spark, view) == before
+    _commit(spark, tbl, 1, [("k1", "b", 3.0, 3, "U")])
+    _commit(spark, tbl, 2, [("k3", "a", 4.0, 4, "U")])
+    tbl.vacuum(keep_versions=2)
+    assert tbl.manifest_at(view.cursor) is None
+    with pytest.raises(ValueError, match="cursor version 0 was vacuumed"):
+        view.refresh(spark)
+    assert view.cursor == 0
+    assert _view_rows(spark, view) == before

@@ -187,3 +187,24 @@ def test_rebuild_folds_pending_deletes_first(spark, tmpdir_path):
     rows_now = _index_rows(spark, idx)
     assert ("r2", "p7") not in rows_now
     assert len(rows_now) == 19
+
+
+def test_corrupt_codebook_raises_instead_of_repicking(spark, tmpdir_path):
+    """Only an ABSENT codebook means "not built yet"; one that does not
+    parse raises on read and on rebuild rather than being silently
+    replaced by a first_k pick."""
+    import pytest
+
+    src = _mk_source(spark, f"{tmpdir_path}/src")
+    idx = IVFIndexView(f"{tmpdir_path}/idx", src, n_centroids=4)
+    assert idx.codebook() is None
+    idx.build(spark)
+    idx.refresh(spark)
+    for bad in ('{"format": 1, "method": "kmeans", "centr', '[1, 2]',
+                '{"method": "kmeans"}'):
+        idx._codebook_path.write_text(bad)
+        with pytest.raises(ValueError, match="corrupt codebook"):
+            idx.codebook()
+        with pytest.raises(ValueError, match="corrupt codebook"):
+            idx.rebuild(spark)
+        assert idx._codebook_path.read_text() == bad
