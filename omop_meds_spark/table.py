@@ -175,8 +175,9 @@ def _xxh64(data: bytes, seed: int) -> int:
     return h ^ (h >> 32)
 
 
-# integral widths Spark hashes as 4-byte ints vs 8-byte longs
-_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "boolean": 1,
+# value range in bits of the types Spark hashes as an integer: bigint as
+# an 8-byte long, the rest (boolean as 0/1) as a 4-byte int
+_INT_BITS = {"boolean": 1, "tinyint": 8, "smallint": 16, "int": 32,
              "bigint": 64}
 
 
@@ -1234,7 +1235,8 @@ class SnapshotTable:
             types = {f.name: f.dataType
                      for f in StructType.fromJson(json.loads(m["schema"])).fields}
         vals = [key[c] for c in self.key_cols]
-        # no recorded type: what createDataFrame would infer
+        # no recorded type: the one createDataFrame infers (int → bigint);
+        # a value of any other Python type falls through to the probe
         h = spark_xxhash64(vals, [
             types[c].simpleString() if c in types else
             "boolean" if isinstance(v, bool) else
