@@ -20,14 +20,18 @@ def _md5l(e: str) -> str:
 
 TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 _REV = "(l_extendedprice::DECIMAL(18,4) * (1.0::DECIMAL(18,4) - l_discount::DECIMAL(18,4)))"
+# A DECIMAL sum reaches DOUBLE through VARCHAR: DuckDB's direct cast of a
+# large DECIMAL is not correctly rounded (2702042220.8499002 for the exact
+# sum 2702042220.84990000, where Spark gives 2702042220.8499), while its
+# text-to-DOUBLE parse is.
 
 ORACLES: dict[str, str] = {}
 
 ORACLES["tpch_q1"] = f"""
 SELECT l_returnflag, l_linestatus,
-       (SUM(l_quantity::DECIMAL(18,4)))::DOUBLE AS sum_qty,
-       (SUM(l_extendedprice::DECIMAL(18,4)))::DOUBLE AS sum_base_price,
-       (SUM({_REV}))::DOUBLE AS sum_disc_price,
+       (SUM(l_quantity::DECIMAL(18,4)))::VARCHAR::DOUBLE AS sum_qty,
+       (SUM(l_extendedprice::DECIMAL(18,4)))::VARCHAR::DOUBLE AS sum_base_price,
+       (SUM({_REV}))::VARCHAR::DOUBLE AS sum_disc_price,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -36,7 +40,7 @@ GROUP BY l_returnflag, l_linestatus
 
 ORACLES["tpch_q3"] = f"""
 SELECT l_orderkey, o_orderdate, o_orderpriority,
-       (SUM({_REV}))::DOUBLE AS revenue
+       (SUM({_REV}))::VARCHAR::DOUBLE AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -49,7 +53,7 @@ LIMIT 10
 """
 
 ORACLES["tpch_q5"] = f"""
-SELECT n_name, (SUM({_REV}))::DOUBLE AS revenue
+SELECT n_name, (SUM({_REV}))::VARCHAR::DOUBLE AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -178,7 +182,7 @@ WHERE rn = 1
 # oracle is deliberately the unsalted formulation
 ORACLES["skew_salted_join"] = """
 SELECT s_name, COUNT(*) AS n_li,
-       (SUM(l_quantity::DECIMAL(18,4)))::DOUBLE AS sum_qty
+       (SUM(l_quantity::DECIMAL(18,4)))::VARCHAR::DOUBLE AS sum_qty
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
 GROUP BY s_name
 """
@@ -360,7 +364,7 @@ w AS (
                                ORDER BY seq_no DESC, event_id DESC) AS rn
   FROM src)
 SELECT event_type, COUNT(*) AS n_rows,
-       (SUM(value::DECIMAL(18,4)))::DOUBLE AS sum_value
+       (SUM(value::DECIMAL(18,4)))::VARCHAR::DOUBLE AS sum_value
 FROM w WHERE rn = 1 AND op <> 'D'
 GROUP BY event_type
 """
@@ -368,7 +372,7 @@ GROUP BY event_type
 ORACLES["rollup_order_stats"] = """
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
-       (SUM(o_totalprice::DECIMAL(18,4)))::DOUBLE AS total_price
+       (SUM(o_totalprice::DECIMAL(18,4)))::VARCHAR::DOUBLE AS total_price
 FROM orders
 GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 """
@@ -389,7 +393,8 @@ WITH e AS (
   FROM events)
 SELECT user_id, event_id,
        COUNT(*) OVER w AS n_1h,
-       (SUM(value::DECIMAL(18,2)) OVER w)::DOUBLE / (COUNT(*) OVER w)
+       (SUM(value::DECIMAL(18,2)) OVER w)::VARCHAR::DOUBLE
+           / (COUNT(*) OVER w)
            AS avg_value_1h
 FROM e
 WINDOW w AS (PARTITION BY user_id ORDER BY tsec
@@ -1217,7 +1222,7 @@ ORACLES["token_packing"] = """
 SELECT source, doc_id, n_chars,
        ((SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id
                             ROWS UNBOUNDED PRECEDING) - n_chars)
-        // 20000) AS bin_id
+        // 20000)::BIGINT AS bin_id
 FROM documents
 """
 
@@ -1261,7 +1266,7 @@ WHERE abs(length(token) - length(canonical)) <= 1
 
 ORACLES["cube_returns"] = """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-       (SUM(l_quantity::DECIMAL(18,4)))::DOUBLE AS sum_qty
+       (SUM(l_quantity::DECIMAL(18,4)))::VARCHAR::DOUBLE AS sum_qty
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 """
@@ -1310,7 +1315,7 @@ probes AS (
   LIMIT 3)
 SELECT z.vec_id, a.cell::INT AS cell,
        list_sum(list_transform(list_zip(z.e, q.qe),
-                s -> s[1] * s[2])) AS score
+                s -> s[1] * s[2]))::BIGINT AS score
 FROM qz z JOIN assign a USING (vec_id), q
 WHERE a.cell IN (SELECT cid FROM probes)
 ORDER BY score DESC, z.vec_id
@@ -1378,7 +1383,7 @@ probes AS (
   LIMIT 3)
 SELECT z.vec_id, a.cell::INT AS cell,
        list_sum(list_transform(list_zip(z.e, q.qe),
-                s -> s[1] * s[2])) AS score
+                s -> s[1] * s[2]))::BIGINT AS score
 FROM qz z JOIN assign a USING (vec_id), q
 WHERE a.cell IN (SELECT cid FROM probes)
 ORDER BY score DESC, z.vec_id

@@ -24,6 +24,11 @@ def get_spark(
     core count (local mode: more would only add scheduling overhead; on a
     real cluster you would size this to 2-3x total executor cores, or let
     AQE coalesce).
+
+    ``extra_conf`` entries override the engine's; an
+    ``extra_conf["spark.driver.extraJavaOptions"]`` replaces the engine's
+    whole JVM option string (GC and JIT settings), so repeat those flags in
+    it to keep them.
     """
     if cores is None:
         master = "local[*]"
@@ -59,16 +64,25 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # Throughput collector for a throughput engine: the CDC hot loop is
-        # batch-shaped (short-lived row/buffer allocations, no pause-time
-        # SLO), where ParallelGC spends measurably less CPU than JDK 17's
-        # default G1 — A/B on the bench replay @local[4]: 72.9 vs 76.7
-        # JVM-CPU-seconds (-5%), wall 21.1 vs 21.9 s. G1's concurrent
-        # mark/refine threads also ride OUTSIDE the task-thread count,
-        # which distorts per-core accounting on a core-quota'd executor
-        # (and on the pinned scaling bench). Override via extra_conf for
-        # latency-sensitive mixed workloads.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # ParallelGC: the CDC hot loop is batch-shaped (short-lived row and
+        # buffer allocations, no pause-time SLO), where it spends less CPU
+        # than G1 (bench replay @local[4]: 72.9 vs 76.7 JVM-CPU-s), and it
+        # runs no concurrent threads outside the task-thread count.
+        # Tier-4 thresholds x10 (defaults 5000/600/15000/40000): a tail
+        # cycle runs Catalyst and scheduler methods a few thousand times per
+        # query, so C2 compiled them without ever paying the compile back.
+        # Sampled per JVM thread over one perfbench tail cycle (seed 11,
+        # 4-vCPU shared host), C2 compiler threads took 14.0-14.2 of
+        # 28.7-29.0 CPU-s at the defaults and 2.5-3.3 of 18.0-18.7 with these;
+        # over interleaved pairs, tail cpu_s_per_mevent fell 33% (10 pairs)
+        # and catchup 20% (5 pairs). Per-row loops still reach C2. C1 only
+        # (-XX:TieredStopAtLevel=1) also cuts the tail, but made a 90 s
+        # catchup 5-12% slower.
+        .config("spark.driver.extraJavaOptions",
+                "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=50000 "
+                "-XX:Tier4MinInvocationThreshold=6000 "
+                "-XX:Tier4CompileThreshold=150000 "
+                "-XX:Tier4BackEdgeThreshold=400000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

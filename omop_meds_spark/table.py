@@ -31,6 +31,12 @@ Materialized state (what ``latest()`` / ``manifest_at()`` return):
 * ``batch_id``       — the micro-batch whose commit produced it
 * ``files``          — {bucket(str): [relative parquet paths]}
 * ``schema``         — target schema (json) at this version (schema registry)
+* ``data_schema``    — the schema the live data files hold (json): every
+  commit records what it wrote (``written_schema``) and the state merges
+  it into the live files' record (union of columns, widened types), so a
+  read passes it to parquet and launches no schema-merge job; None when
+  some commit could not say what it wrote, or two files' types do not
+  widen on read
 * ``committed_hwm``  / ``committed_extra`` — applied batch ids as a
   contiguous high-watermark plus out-of-order exceptions (bounded — the
   unbounded sorted id list of the round-2 format grew O(commits))
@@ -301,12 +307,97 @@ def _empty_state() -> dict:
         "files": {},
         "file_stats": {},
         "schema": None,
+        "data_schema": None,
         "committed_hwm": -1,
         "committed_extra": [],
         "watermark_seq": -1,
         "offsets": {},
         "committed_at": None,
     }
+
+
+# parquet integer types a read widens to any wider one (both of Spark's
+# parquet readers promote int32 to int64 and float to double on read)
+_INT_RANK = {"byte": 1, "short": 2, "integer": 3, "long": 4}
+
+
+def _read_type(a, b):
+    """The type one parquet read can read columns of types ``a`` and
+    ``b`` (Spark schema JSON) as, or None when neither widens to the
+    other on read.
+
+    >>> _read_type("integer", "long"), _read_type("float", "double")
+    ('long', 'double')
+    >>> _read_type("integer", "string") is None
+    True
+    >>> _read_type({"type": "array", "elementType": "integer"},
+    ...            {"type": "array", "elementType": "long"}) is None
+    True
+    """
+    if a == b:
+        return a
+    if not (isinstance(a, str) and isinstance(b, str)):
+        return None  # nested types: only identical ones
+    if a in _INT_RANK and b in _INT_RANK:
+        return a if _INT_RANK[a] > _INT_RANK[b] else b
+    if {a, b} == {"float", "double"}:
+        return "double"
+    return None
+
+
+def _merge_schemas(a: str | None, b: str | None) -> str | None:
+    """Union of two recorded file schemas (Spark schema JSON): ``a``'s
+    columns in order, then ``b``'s new ones, each shared column at the
+    type that reads both. None when either is unknown or a shared
+    column's types do not widen on read.
+
+    >>> i = '{"fields":[{"metadata":{},"name":"k","nullable":true,"type":"integer"}],"type":"struct"}'
+    >>> l = i.replace('"integer"', '"long"')
+    >>> s = l.replace('"k"', '"s"').replace('"long"', '"string"')
+    >>> [(f["name"], f["type"]) for f in json.loads(_merge_schemas(i, l))["fields"]]
+    [('k', 'long')]
+    >>> [f["name"] for f in json.loads(_merge_schemas(i, s))["fields"]]
+    ['k', 's']
+    >>> _merge_schemas(s.replace('"s"', '"k"'), i) is None
+    True
+    """
+    if a is None or b is None:
+        return None
+    if a == b:
+        return a
+    out = {f["name"]: f for f in json.loads(a)["fields"]}
+    for f in json.loads(b)["fields"]:
+        g = out.get(f["name"])
+        if g is not None:
+            t = _read_type(g["type"], f["type"])
+            if t is None:
+                return None
+            f = {**g, "type": t}
+        out[f["name"]] = f
+    return json.dumps({"fields": list(out.values()), "type": "struct"},
+                      separators=(",", ":"), sort_keys=True)
+
+
+def _file_schema(df: DataFrame) -> str:
+    """The schema of the parquet files a bucketed write of ``df`` leaves:
+    ``partitionBy`` keeps the bucket column out of the files, and a
+    parquet read reports every column nullable."""
+    from pyspark.sql.types import StructField, StructType
+
+    return StructType([StructField(f.name, f.dataType, True, f.metadata)
+                       for f in df.schema.fields if f.name != BUCKET_COL]).json()
+
+
+def _parquet_reader(spark: SparkSession, schema_json: str | None):
+    """A reader for data files whose schema was recorded at commit: with
+    it, parquet reads the files (widening older ones, null-filling columns
+    they lack) without a schema-merge job. Files with no record fall back
+    to ``mergeSchema``, which runs that job."""
+    if schema_json is None:
+        return spark.read.option("mergeSchema", "true")
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(json.loads(schema_json)))
 
 
 def _stat_json(v):
@@ -430,12 +521,24 @@ def _apply_delta(state: dict, d: dict) -> dict:
     offsets = {} if d.get("offsets_reset") else dict(state["offsets"])
     for b, s in d.get("offsets", {}).items():
         offsets[str(b)] = max(int(s), int(offsets.get(str(b), -1)))
+    # the live files' schema: a commit that wrote files merges its record
+    # in, unless none of the earlier files stays live (rebucket, full
+    # compaction), where its record is the whole of it
+    data_schema = state.get("data_schema")
+    if any(d.get("files_add", {}).values()) or any(
+            d.get("files_replace", {}).values()):
+        prior = {f for fs in state["files"].values() for f in fs}
+        if any(f in prior for fs in files.values() for f in fs):
+            data_schema = _merge_schemas(data_schema, d.get("written_schema"))
+        else:
+            data_schema = d.get("written_schema")
     out = {
         "version": d["version"],
         "batch_id": d["batch_id"],
         "files": files,
         "file_stats": file_stats,
         "schema": d.get("schema") or state["schema"],
+        "data_schema": data_schema,
         "committed_hwm": hwm,
         "committed_extra": sorted(extra),
         "watermark_seq": max(int(d.get("watermark_seq", -1)), int(state["watermark_seq"])),
@@ -476,8 +579,9 @@ class SnapshotTable:
         # stage-to-publish time. A rebase can also re-record a one-commit-
         # STALE schema_json when writers race a monotone schema evolution —
         # benign: key column types never evolve (key_bucket hashing is
-        # unaffected), readers merge file-level parquet schemas, and the
-        # next commit from the newer-schema writer re-records it.
+        # unaffected), reads use ``data_schema``, which a rebase re-merges
+        # from each commit's own ``written_schema``, and the next commit
+        # from the newer-schema writer re-records it.
         self.concurrent_writers = bool(concurrent_writers)
         self.root = Path(root)
         self.key_cols = list(key_cols)
@@ -1018,9 +1122,9 @@ class SnapshotTable:
             return None
         # Direct-file reads skip hive partition discovery, so the bucket
         # column is re-derived from the keys (same deterministic hash).
-        # mergeSchema: a bucket's delta generations may span schema versions
-        # (merge-on-read) — union of columns, missing → null.
-        df = spark.read.option("mergeSchema", "true").parquet(*files).withColumn(
+        # A bucket's delta generations may span schema versions (merge-on-
+        # read): the recorded live schema is their union, missing → null.
+        df = _parquet_reader(spark, m.get("data_schema")).parquet(*files).withColumn(
             # derive with the layout the MANIFEST was written under, so a
             # time-travel read across a rebucket still groups coherently
             BUCKET_COL, bucket_expr(self.key_cols, m.get("n_buckets", self.n_buckets))
@@ -1140,7 +1244,7 @@ class SnapshotTable:
             if not adds:
                 continue  # compaction / empty batch
             parts.append(
-                spark.read.option("mergeSchema", "true").parquet(*adds)
+                _parquet_reader(spark, d.get("written_schema")).parquet(*adds)
                 .withColumn("_commit_version", F.lit(v))
                 .withColumn("_commit_batch_id", F.lit(d["batch_id"]))
             )
@@ -1296,7 +1400,8 @@ class SnapshotTable:
             batch_id=batch_id, files_add=new_files,
             watermark_seq=watermark_seq, lineage=lineage,
             metrics=metrics, schema_json=schema_json, offsets=offsets,
-            file_stats=self._collect_file_stats(new_files))
+            file_stats=self._collect_file_stats(new_files),
+            written_schema=_file_schema(delta))
 
     def _stage_tag(self, batch_id: int) -> str:
         """Staging directory name for a batch's data files. In concurrent
@@ -1377,6 +1482,7 @@ class SnapshotTable:
                      "n_keys": payload["n_keys"]},
             metrics=metrics, schema_json=payload["schema_json"],
             offsets=payload["offsets"], file_stats=payload["file_stats"],
+            written_schema=payload["written_schema"],
         )
         if not published:  # a concurrent writer committed this batch first
             return None
@@ -1395,8 +1501,9 @@ class SnapshotTable:
         # column TYPES to hash bit-exactly (xxhash64(int32) != xxhash64(
         # bigint)) — without it a point lookup on an int-keyed table would
         # silently probe the wrong bucket
+        written_schema = _file_schema(delta)
         if schema_json is None:
-            schema_json = delta.drop(BUCKET_COL).schema.json()
+            schema_json = written_schema
         spark = delta.sparkSession
         if prepartitioned:
             # caller guarantees BUCKET_COL is present and the DataFrame is
@@ -1484,7 +1591,8 @@ class SnapshotTable:
             self._bloom_stats(delta, new_files))
         return {"new_files": new_files, "offsets": offsets, "n_keys": n_keys,
                 "seq_min": seq_min, "seq_max": seq_max,
-                "schema_json": schema_json, "file_stats": file_stats}
+                "schema_json": schema_json, "file_stats": file_stats,
+                "written_schema": written_schema}
 
     # -------------------------------------------------- write-audit-publish
     def _staged_dir(self) -> Path:
@@ -1535,6 +1643,7 @@ class SnapshotTable:
             "file_stats": payload["file_stats"],
             "offsets": {str(b): int(s) for b, s in sorted(payload["offsets"].items())},
             "schema": payload["schema_json"],
+            "written_schema": payload["written_schema"],
             "n_keys": payload["n_keys"],
             "seq_min": payload["seq_min"],
             "seq_max": payload["seq_max"],
@@ -1579,8 +1688,8 @@ class SnapshotTable:
         files = [str(self.root / f) for fs in s["files_add"].values() for f in fs]
         if not files:
             return None
-        return spark.read.option("mergeSchema", "true").parquet(*files).withColumn(
-            BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets))
+        return _parquet_reader(spark, s.get("written_schema")).parquet(
+            *files).withColumn(BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets))
 
     def publish_staged(self, name: str, require_fast_forward: bool = True) -> bool:
         """Write-audit-publish, step 2: atomically promote the staged batch
@@ -1622,7 +1731,7 @@ class SnapshotTable:
                      "published_at_version": head + 1},
             metrics=s["metrics"] or None, schema_json=s["schema"],
             offsets={int(b): v for b, v in s["offsets"].items()},
-            file_stats=s["file_stats"],
+            file_stats=s["file_stats"], written_schema=s.get("written_schema"),
         )
         p.unlink()
         return True
@@ -1764,7 +1873,8 @@ class SnapshotTable:
                                   if cluster_by else {}),
                                **(lineage_extra or {})},
                       file_stats=file_stats,
-                      add_committed=False)
+                      add_committed=False,
+                      written_schema=_file_schema(reduced))
         return True
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int,
@@ -1836,7 +1946,8 @@ class SnapshotTable:
                           lineage={"rebucket": {"from": old_n, "to": new_n}},
                           file_stats=self._collect_file_stats(new_files),
                           add_committed=False,
-                          offsets=new_offsets, offsets_reset=True)
+                          offsets=new_offsets, offsets_reset=True,
+                          written_schema=_file_schema(reduced))
         except BaseException:
             self.n_buckets = old_n  # nothing published — stay on old layout
             raise
@@ -2262,6 +2373,7 @@ class SnapshotTable:
              "files_add": own.get("files_add", {}),
              "files_replace": own.get("files_replace", {}),
              "commit": own.get("commit"),
+             "written_schema": own.get("written_schema"),
              "lineage": own.get("lineage", {}),
              "metrics": own.get("metrics", {})},
             state["version"], "ckpt", allow_existing_delta=True)
@@ -2323,6 +2435,7 @@ class SnapshotTable:
                  "files_add": own.get("files_add", {}),
                  "files_replace": own.get("files_replace", {}),
                  "commit": own.get("commit"),
+                 "written_schema": own.get("written_schema"),
                  "lineage": own.get("lineage", {}),
                  "metrics": own.get("metrics", {})},
                 oldest_v, "ckpt", allow_existing_delta=True)
@@ -2487,7 +2600,8 @@ class SnapshotTable:
                  file_stats: dict[str, dict] | None = None,
                  add_committed: bool = True,
                  offsets_reset: bool = False,
-                 base_version: int | None = None) -> bool:
+                 base_version: int | None = None,
+                 written_schema: str | None = None) -> bool:
         """Publish one commit: write an O(batch) delta manifest — or, every
         ``checkpoint_every``-th version, the full checkpoint — and advance
         the in-process state cache.
@@ -2500,6 +2614,8 @@ class SnapshotTable:
         ``ConcurrentWriteConflict``), and retry at the next version.
         ``base_version`` is the snapshot the caller PLANNED against
         (compact/COW pass it; appends default to the head at entry).
+        ``written_schema`` is the schema of the files this commit wrote
+        (``_file_schema``); None clears the table's ``data_schema``.
 
         Returns True when published; False when a rebase discovered that a
         concurrent writer already committed this ``batch_id`` (duplicate
@@ -2533,6 +2649,7 @@ class SnapshotTable:
                 "files_replace": files_replace or {},
                 "file_stats": file_stats or {},
                 "schema": schema_json,
+                "written_schema": written_schema,
                 "commit": batch_id if add_committed else None,
                 "watermark_seq": int(watermark_seq),
                 "offsets": {str(b): int(s) for b, s in sorted((offsets or {}).items())},
@@ -2564,6 +2681,7 @@ class SnapshotTable:
                                 "lineage": delta["lineage"], "metrics": delta["metrics"],
                                 "files_add": delta["files_add"],
                                 "files_replace": delta["files_replace"],
+                                "written_schema": written_schema,
                                 "commit": delta["commit"]}
                     self._write_manifest(manifest, version, "ckpt")
                 else:
@@ -2663,6 +2781,7 @@ class SnapshotTable:
             schema_json=schema_json, offsets=offsets,
             file_stats=self._collect_file_stats(new_files),
             base_version=base_version,
+            written_schema=_file_schema(merged),
         )
 
     def _write_manifest(self, manifest: dict, version: int, kind: str,

@@ -1,25 +1,34 @@
 """Spark work of the tail's read and fold paths: ``key_bucket`` hashes on
 the driver (bit-for-bit Spark ``xxhash64``, no job), a manifest-driven
-read of more than 32 files launches no parallel file-listing job, and one
-incremental view fold stays within its measured job budget. Jobs are
-counted per call with ``setJobGroup`` + ``statusTracker``."""
+read of more than 32 files launches no parallel file-listing job, reads
+take the recorded file schema instead of a schema-merge job (also across
+a column add and an int -> bigint widening, before and after compaction),
+a point lookup and one incremental view fold stay within their measured
+job budgets. Jobs are counted per call with ``setJobGroup`` +
+``statusTracker``."""
 
 from __future__ import annotations
 
+import json
 import random
 import uuid
 
 from pyspark.sql import functions as F
 
 from omop_meds_spark.operators.incremental import IncrementalAggView
-from omop_meds_spark.table import SnapshotTable, bucket_expr, spark_xxhash64
+from omop_meds_spark.table import (BUCKET_COL, SnapshotTable, bucket_expr,
+                                   spark_xxhash64)
 
 SCHEMA = "k string, grp string, val double, seq_no long, op string"
 
 # jobs of one fold over the fixture below (32 buckets, two generations),
-# as measured with the one-pass fold; the two-read fold it replaced took
-# 21 on the same fixture
-REFRESH_JOB_BUDGET = 13
+# as measured with the one-pass fold reading the recorded file schema; the
+# same fold took 13 with a schema-merge job per read, and the two-read fold
+# before it 21
+REFRESH_JOB_BUDGET = 10
+# jobs of a point lookup over two generations, as measured; 3 with a
+# schema-merge job per read
+LOOKUP_JOB_BUDGET = 2
 
 
 def _jobs(spark, fn) -> tuple[object, list[str]]:
@@ -130,3 +139,82 @@ def test_refresh_job_budget(spark, tmpdir_path):
             .agg(F.count("*").alias("n"), F.sum("val").alias("s")).collect()}
     assert {(r["grp"], r["n_rows"], float(r["sum_val"]))
             for r in view.read(spark).collect()} == want
+
+
+def test_lookup_job_budget(spark, tmpdir_path):
+    t = SnapshotTable(f"{tmpdir_path}/t", ["k"], n_buckets=32)
+    for b in range(2):
+        t.commit_delta_auto(spark.createDataFrame(
+            [(f"k{i}", "g", float(b), b * 1000 + i, "U") for i in range(400)],
+            SCHEMA), b)
+    rows, jobs = _jobs(spark, lambda: t.lookup(spark, {"k": "k7"}).collect())
+    assert [(r["k"], r["val"]) for r in rows] == [("k7", 1.0)]
+    assert len(jobs) <= LOOKUP_JOB_BUDGET, jobs
+
+
+def _schema_of(df) -> dict:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields
+            if f.name != BUCKET_COL}
+
+
+def test_reads_widen_generations_without_a_schema_merge_job(spark, tmpdir_path):
+    t = SnapshotTable(f"{tmpdir_path}/t", ["k"], n_buckets=4)
+    t.commit_delta_auto(spark.createDataFrame(
+        [(f"k{i}", i, i, "U") for i in range(20)],
+        "k string, n int, seq_no long, op string"), 0)
+    # a column add and an int -> bigint widening, over the same keys
+    t.commit_delta_auto(spark.createDataFrame(
+        [(f"k{i}", (1 << 40) + i, "x", 100 + i, "U") for i in range(0, 20, 2)],
+        "k string, n bigint, note string, seq_no long, op string"), 1)
+    want = {f"k{i}": ((1 << 40) + i, "x") if i % 2 == 0 else (i, None)
+            for i in range(20)}
+    types = {"k": "string", "n": "bigint", "seq_no": "bigint",
+             "op": "string", "note": "string"}
+    assert json.loads(t.latest()["data_schema"])  # recorded
+    for when in ("before compact", "after compact"):
+        # building the frame is where a schema merge would run its job
+        live, jobs = _jobs(spark, lambda: t.read_live(spark))
+        assert jobs == [], (when, jobs)
+        assert _schema_of(live) == types, when
+        assert {r["k"]: (r["n"], r["note"]) for r in live.collect()} == want, when
+        assert t.read(spark).count() == (30 if when == "before compact"
+                                         else 20), when
+        if when == "before compact":
+            assert t.compact(spark)
+    # the change feed reads each version with what that version wrote
+    ch, jobs = _jobs(spark, lambda: t.read_changes(spark, since_version=-1,
+                                                   to_version=1))
+    assert jobs == []
+    assert _schema_of(ch.drop("_commit_version", "_commit_batch_id")) == types
+    got = {(r["_commit_version"], r["k"]): r["n"] for r in ch.collect()}
+    assert got[(0, "k3")] == 3 and got[(1, "k4")] == (1 << 40) + 4
+    # compaction rewrote every bucket: the record is what it wrote
+    assert _schema_of(t.read(spark)) == types
+
+
+def test_data_schema_carried_or_cleared_by_maintenance(spark, tmpdir_path):
+    t = SnapshotTable(f"{tmpdir_path}/t", ["k"], n_buckets=4)
+    for b in range(3):
+        t.commit_delta_auto(spark.createDataFrame(
+            [(f"k{i}", "g", float(b), b * 100 + i, "U") for i in range(30)],
+            SCHEMA), b)
+    rec = t.latest()["data_schema"]
+    assert rec is not None
+    # checkpoint promotion keeps the version's own record for the feed
+    v = t.checkpoint()
+    assert t.manifest_at(v)["data_schema"] == rec
+    assert t.read_changes(spark, v - 1, v).count() == 30
+    # restore and rebucket write through the commit paths and record
+    assert t.restore(spark, version=0)["restored"]
+    assert t.rebucket(spark, 8)
+    assert t.latest()["data_schema"] is not None
+    assert {r["k"]: r["val"] for r in t.read_live(spark).collect()} == {
+        f"k{i}": 0.0 for i in range(30)}
+    clone = t.clone_to(f"{tmpdir_path}/c")
+    assert clone.latest()["data_schema"] == t.latest()["data_schema"]
+    # a type the reader cannot widen (string over double) clears the
+    # record, and the read falls back to the parquet schema merge
+    t.commit_delta_auto(spark.createDataFrame(
+        [("k1", "g", "text", 10_000, "U")],
+        "k string, grp string, val string, seq_no long, op string"), 3)
+    assert t.latest()["data_schema"] is None

@@ -1,8 +1,8 @@
 """Local replica of the driver's correctness gate.
 
 Runs every queries() entry on Spark and its oracle_sql() twin on DuckDB over
-the same sf dir, compares row count, column names, and exact values
-(rows sorted by all columns, columns sorted by name).
+the same sf dir, compares row count, column names, pandas dtype kinds and
+exact values (rows sorted by all columns, columns sorted by name).
 
 Usage: python tools/parity_check.py [sf_dir] [query ...]
 """
@@ -52,6 +52,14 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     if len(spark_pdf) != len(duck_pdf):
         problems.append(f"rows: spark={len(spark_pdf)} duck={len(duck_pdf)}")
         return problems
+    # values_equal passes 2 == 2.0, so an integer column that one side
+    # returns as float (a DuckDB HUGEINT sum) only shows in its dtype. The
+    # kind is compared (integer, float, datetime, ...), not the width or
+    # unit: int32 against int64 and datetime64[ns] against [us] hold the
+    # same values.
+    for c in sorted(spark_pdf.columns):
+        if spark_pdf[c].dtype.kind != duck_pdf[c].dtype.kind:
+            problems.append(f"dtype {c}: spark={spark_pdf[c].dtype} duck={duck_pdf[c].dtype}")
     a, b = normalize(spark_pdf), normalize(duck_pdf)
     for c in a.columns:
         av, bv = a[c].tolist(), b[c].tolist()
