@@ -29,7 +29,7 @@ from omop_meds_spark.queries import ALL_QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the CDC apply kernel (salted last-writer-wins with delete
+    """Flagship: the CDC apply kernel (last-writer-wins with delete
     tombstones) over the sf0.001 events WAL."""
     from omop_meds_spark.queries import cdc_apply_events
 

@@ -57,7 +57,6 @@ def main(argv: list[str] | None = None) -> int:
         r.add_argument("--cores", type=int, default=None)
         r.add_argument("--buckets", type=int, default=32)
         r.add_argument("--files-per-batch", type=int, default=4)
-        r.add_argument("--salts", type=int, default=16)
         if name == "replay":
             r.add_argument("--dlq", action="store_true",
                            help="quarantine structurally invalid events "
@@ -452,7 +451,7 @@ def main(argv: list[str] | None = None) -> int:
         from .runner import CDCRunner
 
         r = CDCRunner(spark, args.wal, args.table, n_buckets=args.buckets,
-                      files_per_batch=args.files_per_batch, n_salts=args.salts,
+                      files_per_batch=args.files_per_batch,
                       dlq=getattr(args, "dlq", False),
                       constraints=getattr(args, "constraint", []),
                       concurrent_writers=getattr(args, "concurrent", False))
@@ -461,7 +460,7 @@ def main(argv: list[str] | None = None) -> int:
         from .streaming.stream_runner import StreamingCDCRunner
 
         r = StreamingCDCRunner(spark, args.wal, args.table, n_buckets=args.buckets,
-                               files_per_batch=args.files_per_batch, n_salts=args.salts)
+                               files_per_batch=args.files_per_batch)
         metrics = r.run_available()
     wall = time.monotonic() - t0
     n_events = sum(m.get("n_events", 0) for m in metrics)

@@ -208,10 +208,10 @@ def salted_join(
     (key, salt) — same result set as the plain join, shuffle fan-in per
     task bounded by 1/n_salts of the hot key.
 
-    The LWW aggregation analogue (upsert.last_writer_wins ``salted=True``)
-    handles hot GROUPs; this handles hot JOIN keys. Identical duplicate
-    fact rows share a salt (content hash) — acceptable: real-world hot
-    keys are many DISTINCT rows per key.
+    Hot GROUPs need no salt: the LWW aggregate's map-side combine
+    already bounds them (see operators/upsert.py); this handles hot JOIN
+    keys. Identical duplicate fact rows share a salt (content hash) —
+    acceptable: real-world hot keys are many DISTINCT rows per key.
 
     ``how`` supports 'inner' and 'left' (fact-preserving); dim-preserving
     joins would need the salts flipped.

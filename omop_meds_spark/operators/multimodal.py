@@ -13,10 +13,9 @@ this container:
   RIFF/WAVE 16-bit-PCM payloads are parsed with a pure-Python chunk
   walker (:func:`_wav_decode`), PPM/P6 images with a pure-Python netpbm
   header tokenizer (:func:`_ppm_decode`), and PNG — a genuinely
-  COMPRESSED format — with a from-scratch RFC 1950/1951/2083 stack
-  (``operators/png.py``: own DEFLATE inflate for stored, fixed- and
-  dynamic-Huffman blocks; chunk CRCs; all five scanline filters) — no
-  external libs, no stdlib decompressor — exercised by the
+  COMPRESSED format — with ``operators/png.py`` (chunk walk with CRCs,
+  stdlib ``zlib`` inflate, all five scanline filters; no external libs) —
+  exercised by the
   ``wav_decode_real`` / ``ppm_decode_real`` / ``png_decode_real``
   queries against exact DuckDB oracles — and multi-frame GIF87a (the
   video analogue) decodes + frame-extracts for real via
@@ -418,8 +417,8 @@ def png_from_documents(docs: DataFrame) -> DataFrame:
     — so across the corpus every PNG filter (None/Sub/Up/Average/Paeth)
     is exercised and the decoder must unfilter correctly for the
     content-derived aggregates to match. The zlib/DEFLATE compression is
-    genuine (stdlib encode side); the DECODE side is the from-scratch
-    inflate in ``operators/png.py``. Like the WAV/PPM twins, the pixel
+    genuine (stdlib on both sides); the chunk walk and unfilters are
+    ``operators/png.py``'s own. Like the WAV/PPM twins, the pixel
     mapping is simple enough that a SQL oracle recomputes the decoded
     aggregates straight from the text."""
     from .png import _png_encode
@@ -445,7 +444,7 @@ def png_from_documents(docs: DataFrame) -> DataFrame:
 
 def decode_png(df: DataFrame) -> DataFrame:
     """REAL compressed-image decode over (media_id, payload): parse each
-    PNG with :func:`png._png_decode` — chunk CRCs, from-scratch DEFLATE,
+    PNG with :func:`png._png_decode` — chunk CRCs, zlib inflate,
     scanline unfiltering — and emit numeric metadata. Same bounded-memory
     iterator ``mapInPandas`` shape as every other decoder here."""
     from .png import _png_decode

@@ -13,14 +13,13 @@ of a CDC upsert: one surviving row per key, chosen by a total order. Spark's
 * Skew: for an *algebraic* aggregate like max_by, map-side combine already
   neutralizes hot keys — every map task emits at most ONE row per key, so
   the reducer of the hottest (repo, path) receives ≤ #map-partitions rows
-  regardless of how many events the key had. The explicit two-phase salted
-  variant (``salted=True``) is kept for non-algebraic reductions (e.g.
-  collect_list-style merges) and as the demonstrable skew mechanism, but it
-  is NOT the default: measured on 3M events it doubles the full-payload
-  shuffle and anti-scales with thread count (12.6s@4c → 43.8s@32c vs
-  5.1s/7.9s for the combiner path), because phase 1 re-shuffles every raw
-  row by (key, salt) before any reduction. AQE skew-join handles the
-  remaining join-side skew.
+  regardless of how many events the key had. An explicit two-phase salted
+  reduction (pre-reduce per (key, salt), then per key) lost to it on every
+  measurement: 12.6s@4c → 43.8s@32c vs 5.1s/7.9s on 3M events, and
+  2.93 s vs 1.97 s (median of 5 pairs) on a 1.2M-event WAL with 90% of
+  events on one hot repo at local[4], because its first phase re-shuffles
+  every raw row by (key, salt) before any reduction. Join-side skew has
+  ``operators.joins.salted_join`` and AQE skew-join.
 
 Delete handling: tombstones are *kept in state* (op='D' rows retain their
 seq_no). This makes the final state independent of how events are split
@@ -33,9 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_N_SALTS = 16
-
 
 def dedup_events(df: DataFrame, event_id_col: str = "event_id") -> DataFrame:
     """Drop redelivered events (exactly-once ingest is dedup on event_id).
@@ -77,44 +73,21 @@ def dedup_events_canonical(
     )
 
 
-def _winner_struct(df: DataFrame, key_cols: list[str], seq_col: str,
-                   tiebreak_col: str) -> tuple[F.Column, F.Column]:
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    payload = F.struct(*[F.col(c) for c in payload_cols])
-    order = F.struct(F.col(seq_col), F.col(tiebreak_col))
-    return payload, order
-
-
 def last_writer_wins(
     df: DataFrame,
     key_cols: list[str],
     seq_col: str = "seq_no",
     tiebreak_col: str = "event_id",
-    n_salts: int = DEFAULT_N_SALTS,
-    salted: bool = False,
 ) -> DataFrame:
     """One row per key: the event with the greatest (seq_no, tiebreak).
 
     Returns the full payload of the winning event (all non-key columns),
     keys included. Aggregation-based (max_by) with map-side combine (the
-    skew story — see module docstring); ``salted=True`` switches to the
-    explicit two-phase salted reduction.
+    skew story — see module docstring).
     """
-    payload, order = _winner_struct(df, key_cols, seq_col, tiebreak_col)
-    if salted:
-        # phase 1: pre-reduce within (key, salt) — salt derives from the
-        # event id so a hot key's events spread over n_salts reducers.
-        salt = F.pmod(F.xxhash64(F.col(tiebreak_col)), F.lit(n_salts))
-        phase1 = (
-            df.groupBy(*key_cols, salt.alias("__salt"))
-            .agg(F.max_by(F.struct(payload.alias("p"), order.alias("o")), order).alias("w"))
-        )
-        final = (
-            phase1.groupBy(*key_cols)
-            .agg(F.max_by(F.col("w.p"), F.col("w.o")).alias("w"))
-        )
-    else:
-        final = df.groupBy(*key_cols).agg(F.max_by(payload, order).alias("w"))
+    payload = F.struct(*[F.col(c) for c in df.columns if c not in key_cols])
+    order = F.struct(F.col(seq_col), F.col(tiebreak_col))
+    final = df.groupBy(*key_cols).agg(F.max_by(payload, order).alias("w"))
     return final.select(*key_cols, "w.*")
 
 
@@ -145,13 +118,10 @@ def merge_state(
     key_cols: list[str],
     seq_col: str = "seq_no",
     tiebreak_col: str = "event_id",
-    n_salts: int = DEFAULT_N_SALTS,
 ) -> DataFrame:
     """MERGE batch winners into existing state (both sides already one row
     per key) — union + LWW. Tombstones participate and survive."""
     if state is None:
         return winners
     unioned = state.unionByName(winners, allowMissingColumns=True)
-    # ≤ 2 rows per key here; salting would only add a shuffle.
-    return last_writer_wins(unioned, key_cols, seq_col, tiebreak_col,
-                            n_salts=n_salts, salted=False)
+    return last_writer_wins(unioned, key_cols, seq_col, tiebreak_col)

@@ -1220,10 +1220,9 @@ def png_decode_real(spark, sf_dir):
     """REAL compressed-format decode: build canonical 8-bit-grayscale PNG
     payloads from document text (one pixel per ascii-safe character,
     scanline filter type = doc_id % 5 so all five PNG filters occur in
-    the corpus), then parse them back with the from-scratch decoder in
-    ``operators/png.py`` — chunk-CRC walk, OWN DEFLATE inflate (stored,
-    fixed- and dynamic-Huffman blocks; no stdlib decompressor), Adler-32
-    check, per-scanline unfiltering. The DuckDB oracle recomputes every
+    the corpus), then parse them back with the decoder in
+    ``operators/png.py`` — chunk-CRC walk, zlib inflate (Adler-32
+    checked), per-scanline unfiltering. The DuckDB oracle recomputes every
     decoded aggregate straight from the text, so the compressed binary
     encode→decode round trip is exact-checked end to end."""
     from .operators.multimodal import decode_png, png_from_documents

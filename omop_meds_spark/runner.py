@@ -8,7 +8,7 @@ Spark recast of the reference's batched main loop
 2. normalize (content sha256 via ``F.sha2`` — JVM-side, no Python),
 3. last-writer-wins per (repo, path) — exactly-once under redelivery
    because identical duplicate copies cannot change a max_by winner
-   (see operators/upsert.py; explicit salting available via ``salted=``),
+   (see operators/upsert.py),
 4. MERGE into BOTH bucketed snapshot tables (source-mirror state +
    MEDS-shaped target): only buckets touched by the batch are read +
    rewritten (copy-on-write), tombstones retained,
@@ -16,9 +16,13 @@ Spark recast of the reference's batched main loop
    per-bucket offsets); an already-committed batch_id is a no-op →
    resume/replay safe, even if a crash lands between the two commits.
 
+``CDCRunner.apply_batch`` is the one micro-batch body: the Structured
+Streaming runner (streaming/stream_runner.py) subclasses ``CDCRunner`` and
+hands each foreachBatch file set to it.
+
 Scale notes: per-batch cost is O(batch events); the apply path never reads
 state (merge-on-read); the LWW agg hash-partitions on the key with
-map-side combine bounding hot-key fan-in, plus AQE. Exactly 2 Spark
+map-side combine bounding hot-key fan-in. Exactly 2 Spark
 actions per batch (the state-delta write, which materializes the winners
 cache, and the MEDS-delta write from cache); per-bucket stats, replay
 offsets, and the watermark come from the written parquet footers
@@ -81,9 +85,9 @@ def quarantine_batch(events: DataFrame, dlq_root: Path, batch_id: int,
     violators) to ``{dlq_root}/b{batch_id}`` with full payload and the
     first failing check in ``_reject_reason``; returns the quarantined
     row count from the written parquet footers (no second Spark action).
-    Overwrite mode keeps crash-replay idempotent. Shared by the batch and
-    streaming runners. Three-valued-logic rule: a NULL predicate row goes
-    to the quarantine side, never silently dropped."""
+    Overwrite mode keeps crash-replay idempotent. Three-valued-logic rule:
+    a NULL predicate row goes to the quarantine side, never silently
+    dropped."""
     out = Path(dlq_root) / f"b{batch_id:06d}"
     bad = events.filter(~F.coalesce(valid_cond_with(constraints), F.lit(False)))
     reason = F.when(~F.coalesce(valid_event_cond(), F.lit(False)),
@@ -213,18 +217,14 @@ class CDCRunner:
         table_root: str | Path,
         n_buckets: int = 32,
         files_per_batch: int = 4,
-        n_salts: int = 16,
-        salted: bool = False,
         compact_every: int = 8,
         dedup: bool = False,
-        adaptive: bool = False,
         views: list | None = None,
         dlq: bool = False,
         constraints: list[str] | None = None,
         concurrent_writers: bool = False,
     ):
         self.spark = spark
-        self.salted = salted
         self.dedup = dedup
         # opt-in dead-letter queue: structurally invalid events (null key,
         # null seq_no, unknown op — see valid_event_cond) are quarantined
@@ -249,19 +249,6 @@ class CDCRunner:
         # self-healing — the view's cursor folds everything unconsumed on
         # the next refresh.
         self.views = list(views or [])
-        # AQE is OFF inside apply_batch by default (restored after): the
-        # micro-batch plan shape is fixed and pre-sized (scan → one keyed
-        # LWW shuffle → project → bucketed write; partition counts chosen
-        # from n_buckets/shuffle_partitions, no joins to re-order, no skew
-        # beyond what salting handles), so runtime re-planning buys nothing
-        # while its per-stage materialization barriers add ~1-2 s of
-        # driver-side latency to EVERY batch — measured on the bench WAL:
-        # 3M-event batch @local[4] 7.4 s (AQE) vs 6.6 s (fixed), and the
-        # 1→4 core scaling floor improves 0.79 → 0.94 because the barrier
-        # cost is serial. Ad-hoc analytics on the same session keep AQE
-        # (the flag only toggles around the batch); pass adaptive=True to
-        # leave the session untouched.
-        self.adaptive = adaptive
         # compact when a bucket accumulates this many delta generations —
         # bounds read_live cost; compaction cost amortizes over batches
         self.compact_every = compact_every
@@ -288,18 +275,25 @@ class CDCRunner:
             target=CHANGE_EVENT_SCHEMA_V0, renames=dict(CANONICAL_RENAMES)
         )
         self.n_buckets = n_buckets
-        self.n_salts = n_salts
         self.metrics: list[dict] = []
 
     # ------------------------------------------------------------- stages
-    def normalize(self, df: DataFrame) -> DataFrame:
-        return normalize_events(df)
-
     def apply_batch(self, batch: WalBatch) -> dict | None:
         """Apply one micro-batch to BOTH targets; returns metrics dict, or
         None if the batch was already fully committed (idempotent replay).
         Each target's commit log is independently idempotent, so a crash
-        between the two commits re-runs only the missing one."""
+        between the two commits re-runs only the missing one.
+
+        AQE is OFF inside the batch (the session's value is restored
+        after): the micro-batch plan shape is fixed and pre-sized (scan →
+        one keyed LWW shuffle → project → bucketed write; partition counts
+        chosen from n_buckets/shuffle_partitions, no joins to re-order), so
+        runtime re-planning buys nothing while its per-stage
+        materialization barriers add ~1-2 s of driver-side latency to
+        EVERY batch — measured on the bench WAL: 3M-event batch @local[4]
+        7.4 s (AQE) vs 6.6 s (fixed), and the 1→4 core scaling floor
+        improves 0.79 → 0.94 because the barrier cost is serial. Ad-hoc
+        analytics on the same session keep AQE."""
         done_state = self.table.is_committed(batch.batch_id)
         done_meds = self.meds_table.is_committed(batch.batch_id)
         if done_state and done_meds:
@@ -307,13 +301,11 @@ class CDCRunner:
         t0 = time.monotonic()
         aqe_key = "spark.sql.adaptive.enabled"
         aqe_prev = self.spark.conf.get(aqe_key, "true")
-        if not self.adaptive:
-            self.spark.conf.set(aqe_key, "false")  # see __init__ rationale
+        self.spark.conf.set(aqe_key, "false")
         try:
             return self._apply_batch_inner(batch, t0)
         finally:
-            if not self.adaptive:
-                self.spark.conf.set(aqe_key, aqe_prev)
+            self.spark.conf.set(aqe_key, aqe_prev)
 
     def _apply_batch_inner(self, batch: WalBatch, t0: float) -> dict:
         events = self.reader.read_batch(self.spark, batch, self.registry)
@@ -327,9 +319,10 @@ class CDCRunner:
             events = dedup_events_canonical(events)
         n_quarantined = 0
         if self.dlq:
-            n_quarantined = self._quarantine(events, batch.batch_id)
+            n_quarantined = quarantine_batch(events, self.dlq_root,
+                                             batch.batch_id, self.constraints)
             if n_quarantined:
-                events = events.filter(self._valid_cond())
+                events = events.filter(valid_cond_with(self.constraints))
         # LWW FIRST, normalize AFTER: the convert-stage columns (sha256,
         # token/lang/line metrics, code mapping) are pure functions of the
         # winner's payload and never influence winner choice (max_by over
@@ -352,10 +345,8 @@ class CDCRunner:
         # method, not inline bucket math: the layout (key_cols, n_buckets)
         # is the table's to own, so a mid-lifetime rebucket() can never
         # desynchronize the stamp from the write.
-        lww = self.table.prepartition_delta(
-            last_writer_wins(events, KEY_COLS, n_salts=self.n_salts, salted=self.salted)
-        )
-        winners = self.normalize(lww).persist()
+        lww = self.table.prepartition_delta(last_writer_wins(events, KEY_COLS))
+        winners = normalize_events(lww).persist()
         try:
             lineage = {"files": list(batch.files), "schema_version": self.registry.version}
             if self.dlq:
@@ -422,13 +413,6 @@ class CDCRunner:
             m["quarantined"] = n_quarantined
         self.metrics.append(m)
         return m
-
-    def _valid_cond(self) -> F.Column:
-        return valid_cond_with(self.constraints)
-
-    def _quarantine(self, events: DataFrame, batch_id: int) -> int:
-        return quarantine_batch(events, self.dlq_root, batch_id,
-                                self.constraints)
 
     def read_dlq(self, spark: SparkSession) -> DataFrame | None:
         """All quarantined events across batches (None if the DLQ is

@@ -1,9 +1,9 @@
 """Structured Streaming CDC ingest: WAL tail → foreachBatch → snapshot table.
 
-The streaming twin of :class:`omop_meds_spark.runner.CDCRunner`. The WAL is
-consumed as a genuine Structured Streaming query; the micro-batch body is
-the same normalize → dedup → salted LWW → MERGE → transactional-commit
-pipeline, so batch and streaming share one code path for the hard parts.
+The streaming driver of :class:`omop_meds_spark.runner.CDCRunner`. The WAL
+is consumed as a genuine Structured Streaming query; each micro-batch is
+applied by the inherited ``CDCRunner.apply_batch``, so batch and streaming
+ingest run one kernel.
 
 Design — the *pointer-file* pattern (manifest-driven file stream):
 
@@ -46,69 +46,22 @@ reference's one-shot CLI bounds a pipeline invocation.
 
 from __future__ import annotations
 
-import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..operators.meds import MEDS_KEY_COLS, change_winners_to_meds
-from ..operators.upsert import last_writer_wins
-from ..plans.align import SchemaRegistry
-from ..runner import merge_commit_target
-from ..schemas import CANONICAL_RENAMES, CHANGE_EVENT_SCHEMA_V0, CONTENT_HASH_COL, KEY_COLS
-from ..sources.wal import WalBatch, WalReader
-from ..table import SnapshotTable
+from ..runner import CDCRunner
+from ..sources.wal import WalBatch
 
 
-class StreamingCDCRunner:
-    """Consume a WAL directory as a Structured Streaming query."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        wal_dir: str | Path,
-        table_root: str | Path,
-        n_buckets: int = 32,
-        files_per_batch: int = 4,
-        n_salts: int = 16,
-        salted: bool = False,
-        views: list | None = None,
-        dlq: bool = False,
-        constraints: list[str] | None = None,
-    ):
-        self.spark = spark
-        # incremental materialized views (IncrementalAggView / SCD2View —
-        # anything with .refresh(spark)), refreshed inside foreachBatch
-        # after the micro-batch commits: the streaming twin of
-        # CDCRunner(views=). A crash between commit and refresh self-heals
-        # (the view's lineage cursor folds everything unconsumed next time).
-        self.views = list(views or [])
-        # DLQ + CHECK constraints: the streaming twin of CDCRunner(dlq=,
-        # constraints=) — same shared quarantine kernel, same
-        # {table}/dlq/b{batch} layout, so read_dlq works over either
-        # runner's output. Constraints imply the split.
-        self.constraints = list(constraints or [])
-        self.dlq = dlq or bool(self.constraints)
-        self.dlq_root = Path(table_root) / "dlq"
-        self.salted = salted
-        self.wal_dir = Path(wal_dir)
-        self.table_root = Path(table_root)
-        self.table = SnapshotTable(table_root, KEY_COLS, n_buckets)
-        self.meds_table = SnapshotTable(Path(table_root) / "meds", MEDS_KEY_COLS, n_buckets)
-        self.registry = SchemaRegistry(
-            target=CHANGE_EVENT_SCHEMA_V0, renames=dict(CANONICAL_RENAMES)
-        )
-        self.n_buckets = n_buckets
-        self.n_salts = n_salts
-        self.files_per_batch = files_per_batch
-        self.metrics: list[dict] = []
-        self._reader = WalReader(wal_dir, files_per_batch)
+class StreamingCDCRunner(CDCRunner):
+    """Consume a WAL directory as a Structured Streaming query. Takes the
+    ``CDCRunner`` constructor; only the streaming driver lives here."""
 
     # ------------------------------------------------------------- pointers
     @property
     def pointers_dir(self) -> Path:
-        return self.table_root / "_stream_pointers"
+        return self.table.root / "_stream_pointers"
 
     # fixed epoch base for pointer mtimes (any constant in the past works;
     # only the ORDER matters to the file source)
@@ -131,7 +84,7 @@ class StreamingCDCRunner:
         import os
 
         n = 0
-        for i, p in enumerate(self._reader.list_files()):
+        for i, p in enumerate(self.reader.list_files()):
             ptr = self.pointers_dir / f"{i:06d}.txt"
             if not ptr.exists():
                 tmp = ptr.with_suffix(".tmp")
@@ -168,58 +121,7 @@ class StreamingCDCRunner:
         if not paths:
             return
         self._guard_fileset(batch_id, paths)
-        done_state = self.table.is_committed(batch_id)
-        done_meds = self.meds_table.is_committed(batch_id)
-        if done_state and done_meds:
-            return  # replayed micro-batch after checkpoint loss — no-op
-        t0 = time.monotonic()
-        batch = WalBatch(batch_id=batch_id, files=tuple(sorted(paths)))
-        from ..runner import normalize_events
-
-        events = self._reader.read_batch(self.spark, batch, self.registry)
-        n_quarantined = 0
-        if self.dlq:
-            from ..runner import quarantine_batch, valid_cond_with
-
-            n_quarantined = quarantine_batch(events, self.dlq_root, batch_id,
-                                             self.constraints)
-            if n_quarantined:
-                events = events.filter(valid_cond_with(self.constraints))
-        # identical-payload redelivery needs no dedup shuffle — max_by over
-        # (seq_no, event_id) is idempotent under duplicate copies.
-        # LWW first, normalize only the winners, cache bucket-aligned so the
-        # state write runs exchange-free (see CDCRunner.apply_batch — the
-        # batch runner's plan, mirrored; the table owns the bucket stamp).
-        lww = self.table.prepartition_delta(
-            last_writer_wins(events, KEY_COLS, n_salts=self.n_salts, salted=self.salted)
-        )
-        winners = normalize_events(lww).persist()
-        try:
-            lineage = {"files": list(batch.files),
-                       "schema_version": self.registry.version, "mode": "streaming"}
-            if self.dlq:
-                lineage["dlq_rows"] = n_quarantined
-            stats = merge_commit_target(
-                self.spark, self.table, winners, batch_id,
-                lineage=lineage, schema_json=self.registry.schema_json(),
-                prepartitioned=True,
-            )
-            merge_commit_target(
-                self.spark, self.meds_table, change_winners_to_meds(winners),
-                batch_id, lineage={**lineage, "target": "meds"},
-            )
-            for t in (self.table, self.meds_table):
-                hot = t.hot_buckets(8)
-                if hot:
-                    t.compact(self.spark, buckets=hot)
-            for v in self.views:
-                v.refresh(self.spark)
-        finally:
-            winners.unpersist()
-        self.metrics.append(
-            {"batch_id": batch_id, "n_keys": stats["n_keys"],
-             "wall_s": time.monotonic() - t0}
-        )
+        self.apply_batch(WalBatch(batch_id=batch_id, files=tuple(sorted(paths))))
 
     def _foreach_batch(self, pointer_df: DataFrame, batch_id: int) -> None:
         # pointer rows are file paths — a handful of strings, driver-safe
@@ -233,10 +135,10 @@ class StreamingCDCRunner:
         Restartable: streaming offsets live in the checkpoint dir, table
         idempotence in the snapshot log."""
         self.publish_pointers()
-        ckpt = str(self.table_root / "_stream_checkpoint")
+        ckpt = str(self.table.root / "_stream_checkpoint")
         stream = (
             self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", self.files_per_batch)
+            .option("maxFilesPerTrigger", self.reader.files_per_batch)
             .load(str(self.pointers_dir))
         )
         q = (
@@ -249,9 +151,3 @@ class StreamingCDCRunner:
         if q.isActive:
             q.stop()
         return self.metrics
-
-    def final_state(self) -> DataFrame | None:
-        return self.table.read_live(self.spark)
-
-    def final_meds(self) -> DataFrame | None:
-        return self.meds_table.read_live(self.spark)

@@ -33,7 +33,8 @@ Materialized state (what ``latest()`` / ``manifest_at()`` return):
 * ``schema``         — target schema (json) at this version (schema registry)
 * ``data_schema``    — the schema the live data files hold (json): every
   commit records what it wrote (``written_schema``) and the state merges
-  it into the live files' record (union of columns, widened types), so a
+  it into the live files' record (union of columns and of nested struct
+  fields, widened types), so a
   read passes it to parquet and launches no schema-merge job; None when
   some commit could not say what it wrote, or two files' types do not
   widen on read
@@ -324,24 +325,66 @@ _INT_RANK = {"byte": 1, "short": 2, "integer": 3, "long": 4}
 def _read_type(a, b):
     """The type one parquet read can read columns of types ``a`` and
     ``b`` (Spark schema JSON) as, or None when neither widens to the
-    other on read.
+    other on read. Nested types merge member-wise: a struct takes ``a``'s
+    fields in order, then ``b``'s new ones (both parquet readers null-fill
+    a struct field a file lacks, also inside arrays and maps), arrays
+    merge their elements, maps need equal keys and merge their values,
+    and nullability is OR-ed.
 
     >>> _read_type("integer", "long"), _read_type("float", "double")
     ('long', 'double')
     >>> _read_type("integer", "string") is None
     True
-    >>> _read_type({"type": "array", "elementType": "integer"},
-    ...            {"type": "array", "elementType": "long"}) is None
+    >>> _read_type({"type": "array", "elementType": "integer", "containsNull": False},
+    ...            {"type": "array", "elementType": "long", "containsNull": True})
+    {'type': 'array', 'elementType': 'long', 'containsNull': True}
+    >>> f = lambda n, t: {"metadata": {}, "name": n, "nullable": False, "type": t}
+    >>> s = _read_type({"type": "struct", "fields": [f("a", "integer")]},
+    ...                {"type": "struct", "fields": [f("b", "string"), f("a", "long")]})
+    >>> [(g["name"], g["type"], g["nullable"]) for g in s["fields"]]
+    [('a', 'long', False), ('b', 'string', True)]
+    >>> m = lambda k, v: {"type": "map", "keyType": k, "valueType": v,
+    ...                   "valueContainsNull": True}
+    >>> _read_type(m("string", "integer"), m("string", "long"))["valueType"]
+    'long'
+    >>> _read_type(m("string", "long"), m("integer", "long")) is None
     True
     """
     if a == b:
         return a
-    if not (isinstance(a, str) and isinstance(b, str)):
-        return None  # nested types: only identical ones
-    if a in _INT_RANK and b in _INT_RANK:
-        return a if _INT_RANK[a] > _INT_RANK[b] else b
-    if {a, b} == {"float", "double"}:
-        return "double"
+    if isinstance(a, str) and isinstance(b, str):
+        if a in _INT_RANK and b in _INT_RANK:
+            return a if _INT_RANK[a] > _INT_RANK[b] else b
+        if {a, b} == {"float", "double"}:
+            return "double"
+        return None
+    if not (isinstance(a, dict) and isinstance(b, dict)) or a["type"] != b["type"]:
+        return None
+    if a["type"] == "struct":
+        fa = {f["name"]: f for f in a["fields"]}
+        fb = {f["name"]: f for f in b["fields"]}
+        fields = []
+        for name in {**fa, **fb}:  # a's order, then b's new ones
+            f, g = fa.get(name), fb.get(name)
+            if f is None or g is None:  # one side's files lack it
+                fields.append({**(f or g), "nullable": True})
+                continue
+            t = _read_type(f["type"], g["type"])
+            if t is None:
+                return None
+            fields.append({**f, "type": t,
+                           "nullable": f["nullable"] or g["nullable"]})
+        return {**a, "fields": fields}
+    if a["type"] == "array":
+        t = _read_type(a["elementType"], b["elementType"])
+        return None if t is None else {
+            **a, "elementType": t,
+            "containsNull": a["containsNull"] or b["containsNull"]}
+    if a["type"] == "map" and a["keyType"] == b["keyType"]:
+        t = _read_type(a["valueType"], b["valueType"])
+        return None if t is None else {
+            **a, "valueType": t,
+            "valueContainsNull": a["valueContainsNull"] or b["valueContainsNull"]}
     return None
 
 
@@ -365,17 +408,9 @@ def _merge_schemas(a: str | None, b: str | None) -> str | None:
         return None
     if a == b:
         return a
-    out = {f["name"]: f for f in json.loads(a)["fields"]}
-    for f in json.loads(b)["fields"]:
-        g = out.get(f["name"])
-        if g is not None:
-            t = _read_type(g["type"], f["type"])
-            if t is None:
-                return None
-            f = {**g, "type": t}
-        out[f["name"]] = f
-    return json.dumps({"fields": list(out.values()), "type": "struct"},
-                      separators=(",", ":"), sort_keys=True)
+    t = _read_type(json.loads(a), json.loads(b))
+    return None if t is None else json.dumps(t, separators=(",", ":"),
+                                             sort_keys=True)
 
 
 def _file_schema(df: DataFrame) -> str:
@@ -1172,8 +1207,7 @@ class SnapshotTable:
 
         def lww(d: DataFrame) -> DataFrame:
             tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-            return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak,
-                                    salted=False)
+            return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
 
         wanted = [b for b in m["files"] if buckets is None or int(b) in buckets]
         if between is None:
@@ -1822,8 +1856,7 @@ class SnapshotTable:
 
             def key_reduce(d):
                 tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak,
-                                        salted=False)
+                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
         reduced = key_reduce(df.drop(BUCKET_COL)).withColumn(
             BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets)
         )
@@ -1916,8 +1949,7 @@ class SnapshotTable:
 
             def key_reduce(d):
                 tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak,
-                                        salted=False)
+                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
         old_n = self.n_buckets
         reduced = key_reduce(df.drop(BUCKET_COL)).withColumn(
             BUCKET_COL, bucket_expr(self.key_cols, new_n))
@@ -2178,8 +2210,7 @@ class SnapshotTable:
 
             def reduce(d: DataFrame) -> DataFrame:
                 tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                w = last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak,
-                                     salted=False)
+                w = last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
                 return w.join(F.broadcast(kdf), on=self.key_cols,
                               how="left_anti")
 

@@ -108,6 +108,23 @@ def test_cli_full_lifecycle(spark, tmpdir_path, capsys):
     assert st["committed_batches"] == 2 and st["buckets"] > 0
 
 
+def test_cli_stream_reports_events(spark, tmpdir_path, capsys):
+    import pyarrow.parquet as pq
+
+    wal, tbl = f"{tmpdir_path}/wal", f"{tmpdir_path}/tbl"
+    assert main(["gen", "--wal", wal, "--events", "3000", "--repos", "8",
+                 "--files", "4"]) == 0
+    capsys.readouterr()
+    assert main(["stream", "--wal", wal, "--table", tbl, "--cores", "8",
+                 "--files-per-batch", "2"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["batches_applied"] == 2 and out["final_keys"] > 0
+    # every WAL row, redelivered copies included
+    assert out["n_events"] == sum(pq.ParquetFile(f).metadata.num_rows
+                                  for f in Path(wal).glob("*.parquet"))
+    assert out["events_per_s"] > 0
+
+
 def test_package_runs_from_pyfiles_zip(tmpdir_path):
     """spark-submit --py-files ships the package as a zip on sys.path
     (zipimport) — the whole package must import and do driver-side work

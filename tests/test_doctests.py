@@ -49,7 +49,7 @@ def test_vector_index_doctests():
 
 
 def test_png_doctests():
-    # the full PNG stack (inflate included) is pure Python
+    # the PNG chunk walk and unfilters are pure Python
     _run(png)
 
 

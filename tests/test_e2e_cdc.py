@@ -197,11 +197,6 @@ def test_apply_batch_restores_adaptive_conf(spark, tmpdir_path):
                   files_per_batch=2)
     r.run()
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # opt-out leaves the session conf alone during the batch as well
-    r2 = CDCRunner(spark, wal, str(Path(tmpdir_path) / "t_aqe2"), n_buckets=4,
-                   files_per_batch=2, adaptive=True)
-    r2.run()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_resume_after_vacuum(spark, tmpdir_path):

@@ -2,7 +2,8 @@
 the driver (bit-for-bit Spark ``xxhash64``, no job), a manifest-driven
 read of more than 32 files launches no parallel file-listing job, reads
 take the recorded file schema instead of a schema-merge job (also across
-a column add and an int -> bigint widening, before and after compaction),
+a column add and an int -> bigint widening, before and after compaction,
+and across a struct widening inside an SCD2 view's history),
 a point lookup and one incremental view fold stay within their measured
 job budgets. Jobs are counted per call with ``setJobGroup`` +
 ``statusTracker``."""
@@ -15,7 +16,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from omop_meds_spark.operators.incremental import IncrementalAggView
+from omop_meds_spark.operators.incremental import IncrementalAggView, SCD2View
 from omop_meds_spark.table import (BUCKET_COL, SnapshotTable, bucket_expr,
                                    spark_xxhash64)
 
@@ -218,3 +219,25 @@ def test_data_schema_carried_or_cleared_by_maintenance(spark, tmpdir_path):
         [("k1", "g", "text", 10_000, "U")],
         "k string, grp string, val string, seq_no long, op string"), 3)
     assert t.latest()["data_schema"] is None
+
+
+def test_scd2_view_read_after_struct_widening_runs_no_job(spark, tmpdir_path):
+    """A source column add widens the struct inside the SCD2 view's
+    ``array<struct>`` history; the view table keeps its file-schema record
+    and reads its old and new generations without a schema-merge job."""
+    keys = ["k"]
+    narrow = "k string, event_id string, seq_no long, attr string, op string"
+    src = SnapshotTable(f"{tmpdir_path}/src", keys, n_buckets=4)
+    view = SCD2View(f"{tmpdir_path}/view", src, n_buckets=4)
+    src.commit_delta_auto(spark.createDataFrame(
+        [("A", "e1", 10, "x", "U")], narrow), 0)
+    view.refresh(spark)
+    src.commit_delta_auto(spark.createDataFrame(
+        [("A", "e2", 20, "y", "U", 7)], narrow + ", extra long"), 1)
+    view.refresh(spark)
+    assert view.table.latest()["data_schema"] is not None
+    _, jobs = _jobs(spark, lambda: view.table.read(spark))
+    assert jobs == []
+    got = {(r["seq"], r["attr"], r["extra"])
+           for r in view.read_intervals(spark).collect()}
+    assert got == {(10, "x", None), (20, "y", 7)}

@@ -198,20 +198,30 @@ def test_sample_frames_shape(docs):
     assert f0["frame_sha256"] == hashlib.sha256(w0).hexdigest()
 
 
-def test_png_inflate_all_deflate_block_types():
-    """The from-scratch DEFLATE decoder handles every RFC 1951 block
+def test_png_decode_every_deflate_block_type():
+    """``_png_decode`` decompresses IDAT payloads of every RFC 1951 block
     type: stored (level 0), dynamic Huffman (level 6/9 on structured
     data), and a HAND-ASSEMBLED fixed-Huffman block (zlib rarely emits
-    btype=1, so it is constructed bit-by-bit here)."""
+    btype=1, so it is constructed bit-by-bit here). A truncated IDAT
+    stream raises."""
+    import struct
     import zlib
 
-    from omop_meds_spark.operators.png import _inflate
+    import pytest
 
-    cases = [b"", b"a", b"abc" * 500, bytes(range(256)) * 8,
-             bytes([1]) * 10_000]
-    for lvl in (0, 1, 6, 9):
-        for c in cases:
-            assert _inflate(zlib.compress(c, lvl)[2:-4]) == c
+    from omop_meds_spark.operators.png import _PNG_SIG, _chunk, _png_decode
+
+    def png(idat: bytes, width: int) -> bytes:
+        ihdr = struct.pack(">IIBBBBB", width, 1, 8, 0, 0, 0, 0)
+        return (_PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat)
+                + _chunk(b"IEND", b""))
+
+    for px in (b"a", b"abc" * 500, bytes(range(256)) * 8,
+               bytes([1]) * 10_000):
+        want = (len(px), sum(px), max(px))
+        for lvl in (0, 1, 6, 9):
+            d = _png_decode(png(zlib.compress(b"\x00" + px, lvl), len(px)))
+            assert (d["width"], d["checksum"], d["max_px"]) == want
 
     bits: list[int] = []
 
@@ -221,15 +231,24 @@ def test_png_inflate_all_deflate_block_types():
     def code(v, n):  # Huffman codes: MSB-first
         bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
 
+    raw = b"\x00FIXED!"  # filter byte 0, then six pixels
     lsb(1, 1)  # final
     lsb(1, 2)  # btype=1 fixed
-    for ch in b"FIXED!":
+    for ch in raw:
         code(0x30 + ch, 8)  # literals 0-143: 8-bit codes from 0x30
     code(0, 7)  # end-of-block
     buf = bytearray((len(bits) + 7) // 8)
     for i, b in enumerate(bits):
         buf[i >> 3] |= b << (i & 7)
-    assert _inflate(bytes(buf)) == b"FIXED!"
+    fixed = b"\x78\x01" + bytes(buf) + struct.pack(">I", zlib.adler32(raw))
+    d = _png_decode(png(fixed, 6))
+    assert (d["width"], d["checksum"], d["max_px"]) == (6, sum(b"FIXED!"),
+                                                        max(b"FIXED!"))
+
+    stream = zlib.compress(b"\x00" + bytes(range(256)) * 8, 0)
+    for cut in (4, len(stream) // 2):  # lost Adler-32; cut mid stored block
+        with pytest.raises(ValueError, match="IDAT"):
+            _png_decode(png(stream[:-cut], 2048))
 
 
 def test_png_round_trip_every_filter_type():

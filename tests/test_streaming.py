@@ -83,6 +83,35 @@ def test_batch_and_streaming_agree(spark, tmpdir_path):
         verify.state_fingerprint(rs.final_state(), FP_COLS)
 
 
+def test_streaming_auto_compaction(spark, tmpdir_path):
+    """The streaming runner compacts at the constructor's threshold, like
+    the batch runner it inherits apply_batch from."""
+    wal = f"{tmpdir_path}/wal"
+    generate_wal(wal, n_events=4000, n_repos=8, paths_per_repo=20, n_files=8, seed=53)
+    r = StreamingCDCRunner(spark, wal, f"{tmpdir_path}/table", n_buckets=4,
+                           files_per_batch=1, compact_every=3)
+    r.run_available()
+    assert len(r.metrics) == 8
+    assert r.table.max_files_per_bucket() <= 3
+    assert verify.state_fingerprint(r.final_state(), FP_COLS) == _oracle_fp(wal)
+
+
+def test_streaming_dedup_matches_batch(spark, tmpdir_path):
+    from omop_meds_spark.runner import CDCRunner
+
+    wal = f"{tmpdir_path}/wal"
+    generate_wal(wal, n_events=3000, n_repos=8, paths_per_repo=20, n_files=4, seed=41)
+    rb = CDCRunner(spark, wal, f"{tmpdir_path}/t_batch", n_buckets=8,
+                   files_per_batch=3, dedup=True)
+    rb.run()
+    rs = StreamingCDCRunner(spark, wal, f"{tmpdir_path}/t_stream", n_buckets=8,
+                            files_per_batch=2, dedup=True)
+    rs.run_available()
+    fp = verify.state_fingerprint(rs.final_state(), FP_COLS)
+    assert fp == verify.state_fingerprint(rb.final_state(), FP_COLS)
+    assert fp == _oracle_fp(wal)
+
+
 def test_committed_batch_id_with_different_fileset_fails_loudly(spark, tmpdir_path):
     """ADVICE: after checkpoint loss, a renumbered batch colliding with a
     committed batch_id but holding DIFFERENT files must raise, not be
@@ -96,7 +125,7 @@ def test_committed_batch_id_with_different_fileset_fails_loudly(spark, tmpdir_pa
     r1.run_available()
 
     # simulate checkpoint loss + changed batching: batch 0 now spans 3 files
-    files = sorted(str(p) for p in r1._reader.list_files())
+    files = sorted(str(p) for p in r1.reader.list_files())
     r2 = StreamingCDCRunner(spark, wal, table, n_buckets=8, files_per_batch=3)
     with pytest.raises(RuntimeError, match="different\\s+fileset"):
         r2._apply_files(files[:3], 0)

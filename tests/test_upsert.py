@@ -3,7 +3,7 @@
 Mirrors the reference's exhaustive resolver-spec style
 (reference: tests/test_build_preferred_event_datetime.py — 18 case groups):
 insert/update/delete orderings, duplicates, ties, batch-split invariance,
-salted/window/plain equivalence.
+window/plain equivalence.
 """
 
 from __future__ import annotations
@@ -86,11 +86,10 @@ def test_lww_cases(spark, name):
     assert got == expected, name
 
 
-@pytest.mark.parametrize("salted", [True, False])
-def test_salted_plain_window_equivalent(spark, salted):
+def test_plain_window_equivalent(spark):
     rows = [ev(s, "U" if s % 7 else "D", f"r{s % 3}", f"p{s % 5}", f"c{s}") for s in range(200)]
     df = mk(spark, rows)
-    agg = last_writer_wins(df, ["repo", "path"], salted=salted)
+    agg = last_writer_wins(df, ["repo", "path"])
     win = last_writer_wins_window(df, ["repo", "path"])
     a = {tuple(r) for r in agg.select(*COLS).collect()}
     w = {tuple(r) for r in win.select(*COLS).collect()}
@@ -128,8 +127,8 @@ def test_lww_128_seeded_shuffled_orderings_match_replay_oracle(spark):
     seq_nos (tiebreak exercised), byte-identical redeliveries — checked
     against a pure-Python replay oracle. All 128 universes ride ONE Spark
     job (the seed is part of the key), so the sweep costs seconds; a
-    second pass folds random BATCH SPLITS through merge_state and a third
-    runs the salted kernel, all landing on the identical final state."""
+    second pass folds random BATCH SPLITS through merge_state, both
+    landing on the identical final state."""
     import random
 
     rows, expected = [], {}
@@ -161,7 +160,6 @@ def test_lww_128_seeded_shuffled_orderings_match_replay_oracle(spark):
                 for r in out.collect()}
 
     assert final(last_writer_wins(df, ["seed", "key"])) == expected
-    assert final(last_writer_wins(df, ["seed", "key"], salted=True)) == expected
     # arbitrary batch splits: hash-bucket the events into 3 batches, LWW
     # each, fold through merge_state — batching must not change the result
     batched = df.withColumn("__b", F.pmod(F.xxhash64("event_id", "seq_no"), F.lit(3)))
