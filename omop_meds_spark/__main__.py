@@ -201,11 +201,18 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.cmd == "gen":
+        from pathlib import Path
+
+        import pyarrow.parquet as pq
+
         from .sources.gen import generate_wal
 
         m = generate_wal(args.wal, n_events=args.events, n_repos=args.repos,
                          n_files=args.files, seed=args.seed)
-        print(json.dumps({"files": m["n_files"], "events": m["n_events"]}))
+        # the rows written, redelivered duplicates included (footer counts)
+        rows = sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in Path(args.wal).glob("*.parquet"))
+        print(json.dumps({"files": m["n_files"], "events": rows}))
         return 0
 
     if args.cmd == "status":
@@ -222,7 +229,7 @@ def main(argv: list[str] | None = None) -> int:
             "committed_batches": m["committed_hwm"] + 1 + len(m["committed_extra"]),
             "watermark_seq": m.get("watermark_seq"),
             "offsets": m.get("offsets", {}),
-            "buckets": len(m.get("files", {})),
+            "buckets": len(t.hot_buckets(1)),
         }))
         return 0
 
@@ -244,21 +251,11 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"files": None}))
             return 0
         cols = ("bucket", "path", "generation", "rows", "bytes",
-                "row_groups", "stats")
+                "row_groups", "stats", "last_bucket")
         if args.summary:
-            agg: dict[int, dict] = {}
-            for r in rows:
-                d = agg.setdefault(r[0], {"bucket": r[0], "files": 0,
-                                          "generations": set(),
-                                          "rows": 0, "bytes": 0})
-                d["files"] += 1
-                d["generations"].add(r[2])
-                d["rows"] += r[3]
-                d["bytes"] += r[4]
-            for b in sorted(agg):
-                d = agg[b]
-                d["generations"] = len(d["generations"])
-                print(json.dumps(d))
+            for r in SnapshotTable.partition_rows(rows):
+                print(json.dumps(dict(zip(
+                    ("bucket", "files", "generations", "rows", "bytes"), r))))
         else:
             for r in rows:
                 print(json.dumps(dict(zip(cols, r))))
@@ -378,9 +375,7 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = _session(args.cores)
         t = SnapshotTable(args.table, KEY_COLS)
-        hot = t.hot_buckets(args.threshold)
-        done = t.compact(spark, buckets=hot) if hot else False
-        print(json.dumps({"compacted_buckets": hot if done else []}))
+        print(json.dumps({"compacted_buckets": t.compact_hot(spark, args.threshold)}))
         return 0
 
     if args.cmd == "rebucket":

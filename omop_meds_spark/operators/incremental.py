@@ -21,7 +21,10 @@ Per refresh of source range ``(v0, v1]`` the cost is O(changed data):
 * the signed contributions aggregate to one tiny delta frame, which
   merges (full outer, null-safe on dims) into the view's current rows for
   the affected dim groups only — groups whose count reaches zero become
-  delete tombstones.
+  delete tombstones;
+* the view table's hot buckets compact at the ingest cadence
+  (``COMPACT_EVERY`` generations), so a view read stays bounded however
+  many refreshes ran.
 
 The view commit is transactional and EXACTLY-ONCE: each fold commits with
 ``lineage={"source_version": v1}`` and the cursor is recovered from the
@@ -240,6 +243,7 @@ class IncrementalAggView:
             self.table.commit_delta_auto(merged, batch_id, lineage=lineage)
         finally:
             delta.unpersist()
+        self.table.compact_hot(spark)
         return True
 
     def _measure_types(self) -> list[tuple[str, str]]:
@@ -416,6 +420,7 @@ class SCD2View:
             F.lit("U").alias(self.op_col),
         )
         self.table.commit_delta_auto(out, batch_id, lineage=lineage)
+        self.table.compact_hot(spark)
         return True
 
     def _empty_frame(self, spark: SparkSession) -> DataFrame:

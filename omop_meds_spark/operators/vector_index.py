@@ -310,6 +310,9 @@ class IVFIndexView:
         delta = functools.reduce(lambda a, b: a.unionByName(b), parts) \
             .withColumn("seq_no", F.lit(batch_id).cast("long"))
         self.table.commit_delta_auto(delta, batch_id, lineage=lineage)
+        # one generation per fold: compact at the ingest cadence so index
+        # reads do not grow with the refresh count
+        self.table.compact_hot(spark)
 
     def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
         """Fold source versions ``(cursor, v1]`` into the index. The fold

@@ -50,7 +50,7 @@ from .schemas import (
     SEQ_COL,
 )
 from .sources.wal import WalBatch, WalReader
-from .table import SnapshotTable
+from .table import COMPACT_EVERY, SnapshotTable
 
 VALID_OPS = ("I", "U", "D")
 
@@ -123,18 +123,21 @@ def merge_commit_target(
     lineage: dict,
     schema_json: str | None = None,
     prepartitioned: bool = False,
+    write_tasks: int = 1,
 ) -> dict:
     """Commit a per-key delta (one winner row per key, CDC envelope intact)
     into a snapshot table — the shared kernel behind both the source-mirror
     state table and the MEDS-shaped target. MERGE-ON-READ flavor: winners
     are appended as a new delta generation, NO state read, NO rewrite
     (write amplification O(batch), not O(state)); ``SnapshotTable.compact``
-    periodically folds generations and ``read_live`` LWW-reduces. Bucket
-    stats / offsets / watermark come from the written parquet footers
+    periodically folds generations and ``read_live`` LWW-reduces. The
+    delta lands as ``write_tasks`` files (one level-0 file per task,
+    spanning the buckets its rows fall in). Bucket stats / offsets /
+    watermark come from the written parquet footers
     (``commit_delta_auto``) — the write is the ONLY Spark action."""
     st = table.commit_delta_auto(
         delta, batch_id, lineage=lineage, schema_json=schema_json,
-        prepartitioned=prepartitioned,
+        prepartitioned=prepartitioned, write_tasks=write_tasks,
     )
     if st is None:
         return {"n_keys": 0, "seq_min": None, "seq_max": table.watermark(),
@@ -217,7 +220,7 @@ class CDCRunner:
         table_root: str | Path,
         n_buckets: int = 32,
         files_per_batch: int = 4,
-        compact_every: int = 8,
+        compact_every: int = COMPACT_EVERY,
         dedup: bool = False,
         views: list | None = None,
         dlq: bool = False,
@@ -278,6 +281,17 @@ class CDCRunner:
         self.metrics: list[dict] = []
 
     # ------------------------------------------------------------- stages
+    def write_tasks(self, batch: WalBatch) -> int:
+        """Write tasks (= level-0 files per target) for the batch's delta
+        commits: one per ``spark.sql.files.maxPartitionBytes`` of WAL
+        input — the split size the session's scan of the same files
+        uses — capped at ``delta_partitions()``. A tail segment or a
+        catch-up batch of a few MB writes one file per table; a multi-GB
+        replay batch keeps the full write parallelism."""
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        size = sum(Path(f).stat().st_size for f in batch.files)
+        return max(1, min(self.table.delta_partitions(self.spark), -(-size // split)))
+
     def apply_batch(self, batch: WalBatch) -> dict | None:
         """Apply one micro-batch to BOTH targets; returns metrics dict, or
         None if the batch was already fully committed (idempotent replay).
@@ -332,11 +346,11 @@ class CDCRunner:
         # regex + Arrow-UDF work AND the shuffle payload by that factor.
         #
         # The winners are REPARTITIONED BY THE STATE TABLE'S BUCKET before
-        # normalize + persist: the cache then stores few bucket-aligned
-        # partitions (delta_partitions()-sized, not shuffle.partitions wide),
-        # the state write runs exchange-free straight from the cache
+        # normalize + persist: the cache then stores one bucket-aligned
+        # partition per write task (write_tasks(), not shuffle.partitions
+        # wide), the state write runs exchange-free straight from the cache
         # (prepartitioned=True skips the commit's own repartition), the
-        # MEDS job re-reads delta_partitions() cache blocks instead of 64,
+        # MEDS job re-reads write_tasks() cache blocks instead of 64,
         # and the normalize columns are computed AFTER the exchange so they
         # never transit a shuffle. Net effect per batch: one fewer exchange
         # and ~4x fewer hot-loop tasks — serial driver/scheduler cost is
@@ -345,7 +359,9 @@ class CDCRunner:
         # method, not inline bucket math: the layout (key_cols, n_buckets)
         # is the table's to own, so a mid-lifetime rebucket() can never
         # desynchronize the stamp from the write.
-        lww = self.table.prepartition_delta(last_writer_wins(events, KEY_COLS))
+        tasks = self.write_tasks(batch)
+        lww = self.table.prepartition_delta(last_writer_wins(events, KEY_COLS),
+                                            tasks)
         winners = normalize_events(lww).persist()
         try:
             lineage = {"files": list(batch.files), "schema_version": self.registry.version}
@@ -370,7 +386,7 @@ class CDCRunner:
                 f_meds = pool.submit(
                     merge_commit_target, self.spark, self.meds_table,
                     change_winners_to_meds(winners), batch.batch_id,
-                    {**lineage, "target": "meds"},
+                    {**lineage, "target": "meds"}, write_tasks=tasks,
                 )
                 stats = f_state.result()
                 f_meds.result()
@@ -381,21 +397,19 @@ class CDCRunner:
             # O(table) — a hot key can no longer trigger full-table rewrites
             # from the hot loop)
             for t in (self.table, self.meds_table):
-                hot = t.hot_buckets(self.compact_every)
-                if hot:
-                    try:
-                        t.compact(self.spark, buckets=hot)
-                    except Exception as e:
-                        # under concurrent ingest another runner's append
-                        # can land on a hot bucket mid-compaction; the
-                        # publish validation refuses (never drops rows) —
-                        # YIELD and let a later batch re-plan the compact.
-                        # Single-writer mode never hits this path.
-                        from .table import ConcurrentWriteConflict
+                try:
+                    t.compact_hot(self.spark, self.compact_every)
+                except Exception as e:
+                    # under concurrent ingest another runner's append
+                    # can land on a hot bucket mid-compaction; the
+                    # publish validation refuses (never drops rows) —
+                    # YIELD and let a later batch re-plan the compact.
+                    # Single-writer mode never hits this path.
+                    from .table import ConcurrentWriteConflict
 
-                        if not (self.concurrent_writers
-                                and isinstance(e, ConcurrentWriteConflict)):
-                            raise
+                    if not (self.concurrent_writers
+                            and isinstance(e, ConcurrentWriteConflict)):
+                        raise
             for v in self.views:
                 v.refresh(self.spark)
         finally:

@@ -7,9 +7,21 @@ and because the north rule makes the commit protocol itself a deliverable.
 Layout::
 
     {root}/
-      data/b{batch:06d}/bucket={k}/part-*.parquet   # immutable data files
+      data/b{batch:06d}/l0/part-*.parquet           # delta (L0) data files
+      data/compact{v:06d}/__bucket={k}/part-*.parquet  # compacted (L1) files
       _log/v{version:08d}-ckpt.json                 # checkpoint manifests
       _log/v{version:08d}-delta.json                # delta manifests
+
+Two file levels, as in an LSM tree's L0 and L1 (O'Neil et al. 1996): a
+delta commit writes one file per write task, its rows sorted by bucket
+and then key, so a small commit writes one file per table however many
+buckets it touches; compaction, rebucket and purge write one file per
+bucket. A delta generation may therefore be one file spanning many
+buckets; compaction writes one file per bucket. The files map lists each
+live file exactly once, under the lowest bucket it covers, and a
+spanning file records the bucket range it covers as the zone map of the
+bucket column (``file_stats[f]["__bucket"] = [lo, hi]``). A file with no
+recorded range covers exactly the bucket it is listed under.
 
 DELTA-ENCODED LOG (the 100 TB-critical part): a commit writes a manifest
 whose size is O(batch), never O(table):
@@ -29,7 +41,8 @@ Materialized state (what ``latest()`` / ``manifest_at()`` return):
 
 * ``version``        — monotonically increasing snapshot id
 * ``batch_id``       — the micro-batch whose commit produced it
-* ``files``          — {bucket(str): [relative parquet paths]}
+* ``files``          — {bucket(str): [relative parquet paths]}, each
+  live file once, under the lowest bucket it covers
 * ``schema``         — target schema (json) at this version (schema registry)
 * ``data_schema``    — the schema the live data files hold (json): every
   commit records what it wrote (``written_schema``) and the state merges
@@ -66,13 +79,14 @@ markers (pre_meds.py:74-79,176-189,315-317) with a single versioned log.
 Scale notes (100 TB design):
 
 * Data is hash-bucketed by key (``pmod(xxhash64(repo, path), n_buckets)``).
-  A micro-batch only appends the buckets it touches (merge-on-read), so
-  per-batch write amplification is bounded by batch key-spread, not table
-  size. At 100 TB you raise ``n_buckets`` (e.g. 16k) so a bucket stays a
-  few GB; commit cost stays O(batch) in manifest bytes because only the
-  touched buckets' file deltas are written.
+  A micro-batch only appends (merge-on-read), and its file count follows
+  its size, not ``n_buckets``, so per-batch write amplification is
+  bounded by the batch, not the table. At 100 TB you raise ``n_buckets``
+  (e.g. 16k) so a bucket stays a few GB; commit cost stays O(batch) in
+  manifest bytes because only the commit's own files are written.
 * The manifest drives partition pruning: reading N buckets touches exactly
-  those files; no directory listing of the whole table.
+  the files that cover them (a spanning file is filtered to the asked-for
+  buckets); no directory listing of the whole table.
 """
 
 from __future__ import annotations
@@ -98,6 +112,10 @@ BUCKET_COL = "__bucket"
 # exactly-once resume would then skip as already applied. One id per
 # maintenance commit parks in committed_extra (bounded: one entry each).
 MAINT_BATCH_BASE = 1 << 40
+
+#: generation depth at which a bucket is compacted: ``CDCRunner`` and the
+#: incremental views fold their tables' hot buckets at this cadence
+COMPACT_EVERY = 8
 
 _LOG_RE = re.compile(r"^v(\d{8})-(ckpt|delta)\.json$")
 
@@ -414,9 +432,11 @@ def _merge_schemas(a: str | None, b: str | None) -> str | None:
 
 
 def _file_schema(df: DataFrame) -> str:
-    """The schema of the parquet files a bucketed write of ``df`` leaves:
-    ``partitionBy`` keeps the bucket column out of the files, and a
-    parquet read reports every column nullable."""
+    """The schema reads use for the parquet files a write of ``df``
+    leaves: without the bucket column (``partitionBy`` keeps it out of
+    per-bucket files; a delta file stores it, but reads re-derive it from
+    the keys), and with every column nullable, as a parquet read reports
+    it."""
     from pyspark.sql.types import StructField, StructType
 
     return StructType([StructField(f.name, f.dataType, True, f.metadata)
@@ -512,6 +532,71 @@ def _absorb(hwm: int, extra: set[int], batch_id: int) -> tuple[int, set[int]]:
     return hwm, extra
 
 
+def _file_range(m: dict, b: str, f: str) -> tuple[int, int]:
+    """The buckets ``[lo, hi]`` that file ``f``, listed under bucket ``b``
+    of manifest ``m``, may hold rows of: a spanning (L0) file records
+    them as the zone map of the bucket column; a file with none holds
+    exactly bucket ``b``.
+
+    >>> m = {"file_stats": {"l0.parquet": {"__bucket": [0, 5]}}}
+    >>> _file_range(m, "0", "l0.parquet"), _file_range(m, "3", "b3.parquet")
+    ((0, 5), (3, 3))
+    """
+    r = m.get("file_stats", {}).get(f, {}).get(BUCKET_COL)
+    return (int(r[0]), int(r[1])) if r else (int(b), int(b))
+
+
+def _coverage(m: dict, buckets=None) -> dict[int, list[str]]:
+    """bucket -> the live files that may hold its rows, for every covered
+    bucket (or only those in ``buckets``).
+
+    >>> m = {"files": {"0": ["l0.parquet"], "2": ["b2.parquet"]},
+    ...      "file_stats": {"l0.parquet": {"__bucket": [0, 2]}}}
+    >>> _coverage(m)
+    {0: ['l0.parquet'], 1: ['l0.parquet'], 2: ['l0.parquet', 'b2.parquet']}
+    """
+    wanted = None if buckets is None else set(buckets)
+    out: dict[int, list[str]] = {}
+    for b, fs in m["files"].items():
+        for f in fs:
+            lo, hi = _file_range(m, b, f)
+            for x in range(lo, hi + 1):
+                if wanted is None or x in wanted:
+                    out.setdefault(x, []).append(f)
+    return dict(sorted(out.items()))
+
+
+def _generation(f: str) -> str:
+    """The write that produced data file ``f``: its directory, which holds
+    one generation's L0 files or one generation's file of one bucket."""
+    return f.rsplit("/", 1)[0]
+
+
+def _closure(m: dict, buckets) -> set[int]:
+    """``buckets`` grown until no live file spans its edge — the buckets a
+    rewrite must cover so that every spanning file it retires is rewritten
+    whole (a spanning file leaves the files map only with every bucket it
+    covers).
+
+    >>> m = {"files": {"0": ["a"], "4": ["b"], "6": ["c"]},
+    ...      "file_stats": {"a": {"__bucket": [0, 4]}, "b": {"__bucket": [4, 5]}}}
+    >>> sorted(_closure(m, [2])), sorted(_closure(m, [6]))
+    ([0, 1, 2, 3, 4, 5], [6])
+    """
+    out = set(buckets)
+    spans = [r for b, fs in m["files"].items() for f in fs
+             for r in [_file_range(m, b, f)] if r[1] > r[0]]
+    grew = True
+    while grew:
+        grew = False
+        for lo, hi in spans:
+            span = set(range(lo, hi + 1))
+            if span & out and not span <= out:
+                out |= span
+                grew = True
+    return out
+
+
 def _apply_delta(state: dict, d: dict) -> dict:
     """Pure-functional replay of one delta manifest onto a materialized
     state (copies the files map — never mutates ``state``, which may be the
@@ -531,6 +616,14 @@ def _apply_delta(state: dict, d: dict) -> dict:
     {}
     >>> s0["files"]                     # inputs were never mutated
     {}
+    >>> s3 = _apply_delta(s2, {"version": 2, "batch_id": 9,
+    ...     "files_add": {"0": ["l0.parquet"]},
+    ...     "file_stats": {"l0.parquet": {"__bucket": [0, 3]}}})
+    >>> s3["files"], s3["file_stats"]   # one listing, its range in stats
+    ({'0': ['l0.parquet']}, {'l0.parquet': {'__bucket': [0, 3]}})
+    >>> _apply_delta(s3, {"version": 3, "batch_id": 9,
+    ...     "files_replace": {str(b): [] for b in range(4)}})["file_stats"]
+    {}
     """
     files = {b: list(fs) for b, fs in state["files"].items()}
     for b, fs in d.get("files_add", {}).items():
@@ -540,9 +633,10 @@ def _apply_delta(state: dict, d: dict) -> dict:
             files[b] = list(fs)
         else:
             files.pop(b, None)
-    # zone maps ride along with the files they describe: merge this delta's
-    # per-file column bounds, then keep stats only for LIVE files (replace /
-    # compaction retires the old generations' stats with the files)
+    # zone maps (and a spanning file's bucket range, the zone map of the
+    # bucket column) ride along with the files they describe: merge this
+    # delta's per-file bounds, then keep stats only for LIVE files (replace
+    # / compaction retires the old generations' stats with the files)
     file_stats = {**state.get("file_stats", {}), **d.get("file_stats", {})}
     if file_stats:
         live = {f for fs in files.values() for f in fs}
@@ -593,7 +687,16 @@ class SnapshotTable:
     """Transactional parquet table with a delta-encoded JSON snapshot log
     (checkpoint every ``checkpoint_every`` versions). Single-writer by
     default (lease-enforced); ``concurrent_writers=True`` enables
-    optimistic concurrency for append commits — see ``__init__``."""
+    optimistic concurrency for append commits — see ``__init__``.
+
+    File layout invariant: a delta generation may be one file spanning
+    many buckets; compaction writes one file per bucket. A delta commit
+    writes one (L0) file per write task, rows sorted by bucket and then
+    key, and records each file's bucket range; ``compact``, ``rebucket``
+    and ``purge_*`` write one (L1) file per bucket, and retire a spanning
+    file only in a commit that rewrites every bucket it covers. Readers
+    resolve a bucket to the files that cover it and filter a spanning
+    file's rows to the buckets asked for."""
 
     def __init__(self, root: str | Path, key_cols: list[str],
                  n_buckets: int | None = None, checkpoint_every: int = 16,
@@ -899,8 +1002,9 @@ class SnapshotTable:
 
     def history(self, spark: SparkSession) -> DataFrame:
         """DESCRIBE-HISTORY analogue: one row per retained commit, newest
-        first — version, manifest kind, committed batch, watermark, touched
-        buckets, and the commit's lineage/metrics as JSON strings. Driver-
+        first — version, manifest kind, committed batch, watermark, the
+        buckets its added files cover and those it replaced, and the
+        commit's lineage/metrics as JSON strings. Driver-
         side log scan (O(retained manifests)), a maintenance accessor."""
         rows = []
         for v, kind, p in self._log_entries():
@@ -909,7 +1013,8 @@ class SnapshotTable:
                 int(v), kind,
                 int(d["batch_id"]) if d.get("batch_id") is not None else None,
                 int(d.get("watermark_seq", -1)),
-                len(d.get("files_add") or {}),
+                len(_coverage({"files": d.get("files_add") or {},
+                               "file_stats": d.get("file_stats") or {}})),
                 len(d.get("files_replace") or {}),
                 float(d["committed_at"]) if d.get("committed_at") else None,
                 json.dumps(d.get("lineage") or {}),
@@ -924,8 +1029,9 @@ class SnapshotTable:
     def _file_rows(self, version: int | None = None,
                    ref: str | None = None) -> list[tuple] | None:
         """Driver-side rows for :meth:`files` (shared with the no-Spark
-        CLI): one tuple per live data file in the snapshot. Footer-only
-        local I/O, parallelized like the commit's stats pass."""
+        CLI): one tuple per live data file in the snapshot, in
+        ``FILES_SCHEMA`` order. Footer-only local I/O, parallelized like
+        the commit's stats pass."""
         version = self._resolve_version(version, ref)
         m = self._load_state(version)
         if m is None:
@@ -937,12 +1043,13 @@ class SnapshotTable:
         def one(b: str, rel: str) -> tuple:
             p = self.root / rel
             md = pq.ParquetFile(p).metadata
-            # data/{generation-tag}/__bucket__={b}/part-*.parquet
+            # data/{generation-tag}/{__bucket={b} | l0}/part-*.parquet
             parts = rel.split("/")
             gen = parts[1] if len(parts) > 2 and parts[0] == "data" else ""
-            return (int(b), rel, gen, int(md.num_rows),
+            lo, hi = _file_range(m, b, rel)
+            return (lo, rel, gen, int(md.num_rows),
                     int(p.stat().st_size), int(md.num_row_groups),
-                    json.dumps(stats.get(rel, {}), sort_keys=True))
+                    json.dumps(stats.get(rel, {}), sort_keys=True), hi)
 
         pairs = [(b, f)
                  for b, fs in sorted(m["files"].items(), key=lambda kv: int(kv[0]))
@@ -953,16 +1060,18 @@ class SnapshotTable:
             return list(ex.map(lambda bf: one(*bf), pairs))
 
     FILES_SCHEMA = ("bucket int, path string, generation string, rows long, "
-                    "bytes long, row_groups int, stats string")
+                    "bytes long, row_groups int, stats string, last_bucket int")
 
     def files(self, spark: SparkSession, version: int | None = None,
               ref: str | None = None) -> DataFrame | None:
         """Iceberg ``db.table.files`` metadata-table analogue: one row per
-        LIVE data file in the snapshot — bucket, generation (the commit or
-        compaction tag that wrote the file), relative path, parquet footer
-        row count, on-disk bytes, row-group count, and the file's recorded
-        zone-map bounds as JSON. ``version=`` / ``ref=`` time-travel
-        exactly like :meth:`read`.
+        LIVE data file in the snapshot — the buckets it covers
+        (``bucket`` to ``last_bucket``: equal for a per-bucket file, a
+        range for a delta file spanning many buckets), generation (the
+        commit or compaction tag that wrote the file), relative path,
+        parquet footer row count, on-disk bytes, row-group count, and the
+        file's recorded zone-map bounds as JSON. ``version=`` / ``ref=``
+        time-travel exactly like :meth:`read`.
 
         With :meth:`history` (the ``snapshots`` analogue) this exposes the
         snapshot log as queryable DataFrames, so layout health — small-file
@@ -982,24 +1091,34 @@ class SnapshotTable:
     def partitions(self, spark: SparkSession, version: int | None = None,
                    ref: str | None = None) -> DataFrame | None:
         """Iceberg ``db.table.partitions`` metadata-table analogue: one row
-        per bucket with its live file count, distinct generation count (the
-        compaction-debt signal — ``hot_buckets`` fires off the same number),
-        footer row total, and on-disk bytes. The per-bucket rollup of
-        :meth:`files`, computed from the same driver-side footer scan;
-        row/byte skew across buckets — the thing that decides a
-        ``rebucket`` — reads directly off it. Time-travels like ``read``."""
+        per bucket with the count of live files that cover it, their
+        distinct generation count (the compaction-debt signal —
+        ``hot_buckets`` fires off the same number), footer row total, and
+        on-disk bytes. The per-bucket rollup of :meth:`files`, computed
+        from the same driver-side footer scan; row/byte skew across
+        buckets — the thing that decides a ``rebucket`` — reads directly
+        off it. A delta file spanning several buckets counts in each, so
+        ``rows``/``bytes`` are what a read of the bucket opens (their sum
+        over buckets exceeds the table's until compaction splits the
+        file). Time-travels like ``read``."""
         rows = self._file_rows(version, ref)
         if rows is None:
             return None
+        return spark.createDataFrame(self.partition_rows(rows),
+                                     self.PARTITIONS_SCHEMA)
+
+    @staticmethod
+    def partition_rows(file_rows: list[tuple]) -> list[tuple]:
+        """The ``PARTITIONS_SCHEMA`` rollup of ``_file_rows`` output."""
         agg: dict[int, list] = {}
-        for b, _rel, gen, nrows, nbytes, _rg, _st in rows:
-            a = agg.setdefault(b, [0, set(), 0, 0])
-            a[0] += 1
-            a[1].add(gen)
-            a[2] += nrows
-            a[3] += nbytes
-        out = [(b, a[0], len(a[1]), a[2], a[3]) for b, a in sorted(agg.items())]
-        return spark.createDataFrame(out, self.PARTITIONS_SCHEMA)
+        for lo, _rel, gen, nrows, nbytes, _rg, _st, hi in file_rows:
+            for b in range(lo, hi + 1):
+                a = agg.setdefault(b, [0, set(), 0, 0])
+                a[0] += 1
+                a[1].add(gen)
+                a[2] += nrows
+                a[3] += nbytes
+        return [(b, a[0], len(a[1]), a[2], a[3]) for b, a in sorted(agg.items())]
 
     def version_as_of(self, ts: float) -> int | None:
         """Timestamp time travel (Iceberg ``TIMESTAMP AS OF`` analogue):
@@ -1118,7 +1237,12 @@ class SnapshotTable:
         opened, which is the pruning high-cardinality values (commit shas,
         paths) need where min/max bounds are useless. Lossless: files with
         no recorded filter are scanned, and the exact predicate still
-        applies to survivors."""
+        applies to survivors.
+
+        ``buckets=`` opens every file that covers one of them; when a
+        delta file spanning other buckets is among them, its rows are
+        filtered to the asked-for buckets, so the frame holds exactly
+        their rows."""
         version = self._resolve_version(version, ref)
         m = self._load_state(version)
         if m is None:
@@ -1141,22 +1265,30 @@ class SnapshotTable:
         if between is not None:
             col, lo, hi = between
             jlo, jhi = _stat_json(lo), _stat_json(hi)
+        wanted = None if buckets is None else {int(b) for b in buckets}
         files: list[str] = []
+        spill = False  # a chosen file also holds rows of other buckets
         for b, fs in m["files"].items():
-            if buckets is None or int(b) in buckets:
-                for f in fs:
-                    fst = stats.get(f, {})
-                    if between is not None and not _stats_overlap(
-                            fst.get(col), jlo, jhi):
+            for f in fs:
+                if wanted is not None:
+                    lo, hi = _file_range(m, b, f)
+                    span = range(lo, hi + 1)
+                    if not any(x in wanted for x in span):
                         continue
-                    if bloom_pos is not None and _bloom_excludes(
-                            fst.get("__bloom__", {}).get(col), bloom_pos):
-                        continue
-                    files.append(str(self.root / f))
+                    spill = spill or not all(x in wanted for x in span)
+                fst = stats.get(f, {})
+                if between is not None and not _stats_overlap(
+                        fst.get(col), jlo, jhi):
+                    continue
+                if bloom_pos is not None and _bloom_excludes(
+                        fst.get("__bloom__", {}).get(col), bloom_pos):
+                    continue
+                files.append(str(self.root / f))
         if not files:
             return None
         # Direct-file reads skip hive partition discovery, so the bucket
-        # column is re-derived from the keys (same deterministic hash).
+        # column is re-derived from the keys (same deterministic hash; a
+        # delta file's own copy of it is not in the recorded schema).
         # A bucket's delta generations may span schema versions (merge-on-
         # read): the recorded live schema is their union, missing → null.
         df = _parquet_reader(spark, m.get("data_schema")).parquet(*files).withColumn(
@@ -1164,6 +1296,8 @@ class SnapshotTable:
             # time-travel read across a rebucket still groups coherently
             BUCKET_COL, bucket_expr(self.key_cols, m.get("n_buckets", self.n_buckets))
         )
+        if spill:
+            df = df.filter(F.col(BUCKET_COL).isin(sorted(wanted)))
         if between is not None:
             df = self._between_filter(df, *between)
         return df
@@ -1175,15 +1309,17 @@ class SnapshotTable:
                   eq: tuple[str, object] | None = None) -> DataFrame | None:
         """Current state minus delete tombstones (the user-facing table).
 
-        Merge-on-read: LWW-reduces across a bucket's delta generations.
-        FAST PATH: every data file holds at most one row per key (delta
-        files are per-batch winners, compaction files are fully reduced),
-        so a bucket with exactly ONE generation needs no reduce at all —
-        when every requested bucket is single-generation (the steady state
-        right after compaction), the plan is scan + tombstone filter with
-        ZERO exchanges. Otherwise the LWW reduce shuffles once on the key;
-        at 100 TB the scheduled compaction keeps most reads on the fast
-        path.
+        Merge-on-read: LWW-reduces across the delta generations that cover
+        a bucket. A delta generation may be one file spanning many
+        buckets; compaction writes one file per bucket — either way a
+        generation holds at most one row per key (delta files are
+        per-batch winners, compaction files are fully reduced). FAST
+        PATH: a bucket covered by exactly ONE generation needs no reduce
+        at all — when every requested bucket is single-generation (the
+        steady state right after compaction, or after a first load), the
+        plan is scan + tombstone filter with ZERO exchanges. Otherwise the
+        LWW reduce shuffles once on the key; at 100 TB the scheduled
+        compaction keeps most reads on the fast path.
 
         ``between=(col, lo, hi)`` filters on the LWW WINNER's value.
         Zone-map file skipping applies only to SINGLE-generation buckets:
@@ -1209,18 +1345,18 @@ class SnapshotTable:
             tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
             return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
 
-        wanted = [b for b in m["files"] if buckets is None or int(b) in buckets]
+        depth = {b: len({_generation(f) for f in fs})
+                 for b, fs in _coverage(m, buckets).items()}
         if between is None:
-            single_gen = all(len(m["files"][b]) == 1 for b in wanted)
             df = self.read(spark, buckets, version=version)
             if df is None:
                 return None
             df = df.drop(BUCKET_COL)
-            if not single_gen:
+            if any(d > 1 for d in depth.values()):
                 df = lww(df)
             return df.filter(F.col(op_col) != "D")
-        single = [int(b) for b in wanted if len(m["files"][b]) == 1]
-        multi = [int(b) for b in wanted if len(m["files"][b]) > 1]
+        single = [b for b, d in depth.items() if d == 1]
+        multi = [b for b, d in depth.items() if d > 1]
         parts: list[DataFrame] = []
         if single:
             d1 = (self.read(spark, single, version=version, eq=eq)
@@ -1316,17 +1452,20 @@ class SnapshotTable:
 
     def changed_buckets(self, since_version: int,
                         to_version: int | None = None) -> list[int] | None:
-        """The buckets that commits in ``(since_version, to_version]``
-        added files to — where every row of ``read_changes`` over the same
-        range lives — from the manifests alone, with no Spark job. None
-        when a commit in the range was written under another bucket
-        layout (a rebucket in between), whose ids do not address this
-        one. Raises like ``read_changes`` on a vacuumed range."""
+        """The buckets that the files added by commits in
+        ``(since_version, to_version]`` cover — where every row of
+        ``read_changes`` over the same range lives (a spanning delta file
+        names its whole recorded range) — from the manifests alone, with
+        no Spark job. None when a commit in the range was written under
+        another bucket layout (a rebucket in between), whose ids do not
+        address this one. Raises like ``read_changes`` on a vacuumed
+        range."""
         out: set[int] = set()
         for _, d in self._change_manifests(since_version, to_version):
             if int(d.get("n_buckets", self.n_buckets)) != self.n_buckets:
                 return None
-            out.update(int(b) for b in d.get("files_add", {}))
+            out.update(_coverage({"files": d.get("files_add", {}),
+                                  "file_stats": d.get("file_stats", {})}))
         return sorted(out)
 
     def _raw_log_entries(self) -> list[tuple[int, str, Path]]:
@@ -1416,16 +1555,16 @@ class SnapshotTable:
         schema_json: str | None = None,
         offsets: dict[int, int] | None = None,
     ) -> bool:
-        """Merge-on-read commit: append the batch's per-key winners as new
-        data files — NO state read, NO rewrite. Readers LWW-reduce across
-        a bucket's delta files (``read_live``); ``compact`` bounds the file
-        count. This is the hot-path commit (write amplification O(batch),
-        not O(state)); ``commit_merged`` remains the copy-on-write/compaction
-        commit."""
+        """Merge-on-read commit with caller-supplied offsets: append the
+        batch's per-key winners (with the bucket column) as one new file
+        per touched bucket — NO state read, NO rewrite. Readers LWW-reduce
+        across a bucket's generations (``read_live``); ``compact`` bounds
+        their count. ``commit_delta_auto`` is the hot-path commit, which
+        writes one file per write task instead; ``commit_merged`` remains
+        the copy-on-write commit."""
         if self.is_committed(batch_id):
             return False
-        # one file per bucket per generation (file count == generation
-        # count, which drives compaction); the repartition shuffles only
+        # one file per bucket per generation; the repartition shuffles only
         # the per-key winners (O(keys-in-batch), usually cached upstream)
         delta = delta.repartition(max(len(touched_buckets), 1), F.col(BUCKET_COL))
         new_files = self._write_bucketed(delta, self._stage_tag(batch_id),
@@ -1449,30 +1588,30 @@ class SnapshotTable:
         return tag
 
     def delta_partitions(self, spark: SparkSession) -> int:
-        """Partition count for a delta write: enough for parallelism, no
-        more — ``partitionBy`` still emits exactly one file per bucket
-        because each bucket's rows hash to one partition. Exposed so a
-        caller can pre-partition the delta INSIDE its own cached pipeline
-        (see ``prepartitioned=`` on ``commit_delta_auto``) with the exact
-        formula the write would otherwise apply."""
+        """The most write tasks a delta commit uses: enough for
+        parallelism, no more. A delta commit writes one file per task, so
+        callers size a small batch below it (``CDCRunner`` takes one task
+        per scan split of WAL input); each bucket's rows still land in
+        one task, because the delta is hash-partitioned on the bucket."""
         return min(self.n_buckets, max(2, spark.sparkContext.defaultParallelism * 2))
 
-    def prepartition_delta(self, delta: DataFrame) -> DataFrame:
+    def prepartition_delta(self, delta: DataFrame,
+                           write_tasks: int = 1) -> DataFrame:
         """Bucket-align a delta for ``commit_delta_auto(prepartitioned=True)``:
         stamp THIS table's bucket id (its own ``key_cols``/``n_buckets`` —
         never a caller-side copy that a mid-lifetime ``rebucket()`` would
-        silently invalidate) and hash-partition by it, ``delta_partitions()``
-        wide. Callers compute derived columns and ``persist()`` AFTER this so
-        the cache stores bucket-aligned partitions and the commit's own
-        repartition can be skipped."""
+        silently invalidate) and hash-partition by it into ``write_tasks``
+        partitions, one per file the commit writes. Callers compute
+        derived columns and ``persist()`` AFTER this so the cache stores
+        bucket-aligned partitions and the commit's own repartition can be
+        skipped."""
         # one projection, not drop + withColumn: each DataFrame op is an
         # eager Catalyst analysis pass — serial driver latency paid per
         # micro-batch on both sides of the N→4N ratio
         out = delta.select(
             *[c for c in delta.columns if c != BUCKET_COL],
             bucket_expr(self.key_cols, self.n_buckets).alias(BUCKET_COL))
-        return out.repartition(
-            self.delta_partitions(out.sparkSession), F.col(BUCKET_COL))
+        return out.repartition(max(1, write_tasks), F.col(BUCKET_COL))
 
     def commit_delta_auto(
         self,
@@ -1483,22 +1622,25 @@ class SnapshotTable:
         schema_json: str | None = None,
         seq_col: str = "seq_no",
         prepartitioned: bool = False,
+        write_tasks: int = 1,
     ) -> dict | None:
         """Merge-on-read commit whose bucket stats come from the WRITTEN
         parquet footers instead of a separate Spark aggregation job.
 
-        The write is the only action: one file per touched bucket
-        (repartition by the bucket column + partitionBy), then the driver
-        reads each new file's footer — row count and the ``seq_col``
-        column's min/max statistics — to derive touched buckets, per-bucket
-        replay offsets, and the watermark. Footer reads are metadata-only
-        local I/O (ms for tens of buckets); at 16k buckets they parallelize
-        trivially driver-side. This is the lakehouse-idiomatic shape:
-        column statistics already paid for by the parquet writer double as
-        the commit's lineage, the way Iceberg manifests carry per-file
-        column bounds. Files whose footers carry no usable ``seq_col``
-        statistics (stats disabled / all-null row group) fall back to one
-        tiny Spark min/max pass over just those files.
+        The write is the only action: one level-0 file per write task
+        (``write_tasks``, hash-partitioned on the bucket column, rows
+        sorted by bucket and then key), so a small commit writes one file
+        however many buckets it touches. Then the driver reads each new
+        file's footer — row count, the bucket column's min/max (the range
+        the file covers, recorded in the manifest) and the ``seq_col``
+        column's min/max — to derive the per-bucket replay offsets and the
+        watermark. Footer reads are metadata-only local I/O. This is the
+        lakehouse-idiomatic shape: column statistics already paid for by
+        the parquet writer double as the commit's lineage, the way Iceberg
+        manifests carry per-file column bounds. Files whose footers carry
+        no usable ``seq_col`` statistics (stats disabled / all-null row
+        group) fall back to one tiny Spark min/max pass over just those
+        files.
 
         Returns {n_keys, seq_min, seq_max} (None values when the batch was
         empty), or None if ``batch_id`` was already committed."""
@@ -1506,7 +1648,7 @@ class SnapshotTable:
             return None
         payload = self._write_delta_with_stats(
             delta, self._stage_tag(batch_id), seq_col, schema_json,
-            prepartitioned=prepartitioned)
+            prepartitioned=prepartitioned, write_tasks=write_tasks)
         prev_wm = self.watermark()
         seq_min, seq_max = payload["seq_min"], payload["seq_max"]
         published = self._publish(
@@ -1525,12 +1667,15 @@ class SnapshotTable:
     def _write_delta_with_stats(self, delta: DataFrame, dirname: str,
                                 seq_col: str = "seq_no",
                                 schema_json: str | None = None,
-                                prepartitioned: bool = False) -> dict:
-        """Write a delta's bucketed parquet under ``data/{dirname}`` and
-        derive the commit payload (files, per-bucket offsets, watermark
-        inputs, zone-map stats) from the WRITTEN footers — the shared body
-        of ``commit_delta_auto`` (immediate publish) and ``stage_delta``
-        (write-audit-publish)."""
+                                prepartitioned: bool = False,
+                                write_tasks: int = 1) -> dict:
+        """Write a delta's level-0 parquet under ``data/{dirname}/l0`` — one
+        file per write task, rows sorted by bucket and then key, the bucket
+        column stored — and derive the commit payload (files listed under
+        the lowest bucket each covers, their bucket ranges, per-bucket
+        offsets, watermark inputs, zone-map stats) from the WRITTEN
+        footers — the shared body of ``commit_delta_auto`` (immediate
+        publish) and ``stage_delta`` (write-audit-publish)."""
         # always record the commit's schema: key_bucket/lookup need the key
         # column TYPES to hash bit-exactly (xxhash64(int32) != xxhash64(
         # bigint)) — without it a point lookup on an int-keyed table would
@@ -1541,7 +1686,7 @@ class SnapshotTable:
         spark = delta.sparkSession
         if prepartitioned:
             # caller guarantees BUCKET_COL is present and the DataFrame is
-            # already hash-partitioned by it (delta_partitions()-sized) —
+            # already hash-partitioned by it into its write tasks —
             # typically so a persisted upstream cache stores bucket-aligned
             # partitions and THIS write runs exchange-free from the cache
             if BUCKET_COL not in delta.columns:
@@ -1550,79 +1695,81 @@ class SnapshotTable:
             if BUCKET_COL not in delta.columns:
                 delta = delta.withColumn(
                     BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets))
-            # see delta_partitions(): one file per bucket regardless of the
-            # partition count, while a low-core run stops paying 32 task
-            # roundtrips for a tiny delta
-            delta = delta.repartition(self.delta_partitions(spark), F.col(BUCKET_COL))
-        staging = self.root / "data" / dirname
-        delta.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(staging))
+            delta = delta.repartition(max(1, write_tasks), F.col(BUCKET_COL))
+        staging = self.root / "data" / dirname / "l0"
+        (delta.sortWithinPartitions(BUCKET_COL, *self.key_cols)
+         .write.mode("overwrite").parquet(str(staging)))
 
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
-        def bucket_stats(bdir: Path):
-            b = int(bdir.name.split("=", 1)[1])
-            fs = sorted(bdir.glob("*.parquet"))
-            rows, lo, hi = 0, None, None
-            no_stats: list[str] = []
-            for f in fs:
-                md = pq.ParquetFile(f).metadata
-                rows += md.num_rows
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[seq_col]
-                got = False
+        def footer(f: Path):
+            """rows, (min, max) of the bucket and of ``seq_col``"""
+            md = pq.ParquetFile(f).metadata
+            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+            bounds = []
+            for c in (BUCKET_COL, seq_col):
+                lo = hi = None
                 for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
+                    st = md.row_group(rg).column(idx[c]).statistics
                     if st is None or not st.has_min_max:
                         continue  # stats disabled or all-null row group
-                    got = True
                     lo = st.min if lo is None else min(lo, st.min)
                     hi = st.max if hi is None else max(hi, st.max)
-                if not got and md.num_rows > 0:
-                    no_stats.append(str(f))
-            return b, [str(p.relative_to(self.root)) for p in fs], rows, lo, hi, no_stats
+                bounds.append((lo, hi))
+            return f, md.num_rows, bounds[0], bounds[1]
 
-        bdirs = sorted(staging.glob(f"{BUCKET_COL}=*"))
-        with ThreadPoolExecutor(min(16, max(1, len(bdirs)))) as pool:
-            stats = list(pool.map(bucket_stats, bdirs))
+        files = sorted(staging.glob("*.parquet"))
+        with ThreadPoolExecutor(min(16, max(1, len(files)))) as pool:
+            stats = [s for s in pool.map(footer, files) if s[1] > 0]
+        for f in set(files) - {s[0] for s in stats}:
+            f.unlink()  # an empty task's file: nothing to publish
         if prepartitioned:
             # the contract the caller asserted is cheap to CHECK from the
-            # staged layout the footer scan already enumerated — fail the
-            # commit instead of publishing a corrupt manifest if the bucket
-            # ids came from a stale layout (wrong n_buckets after rebucket)
-            # or the hash-alignment step was skipped (a bucket spanning
-            # partitions breaks the generation-count == file-count invariant)
-            bad = [b for b, fs, *_ in stats if fs and (b < 0 or b >= self.n_buckets)]
-            multi = [b for b, fs, *_ in stats if len(fs) > 1]
-            if bad or multi:
+            # staged footers — fail the commit instead of publishing a
+            # corrupt manifest if the bucket ids came from a stale layout
+            # (wrong n_buckets after rebucket), or if the frame was not
+            # partitioned into write tasks (one file per input partition)
+            bad = sorted({b for _, _, (lo, hi), _ in stats for b in (lo, hi)
+                          if b is not None and not 0 <= b < self.n_buckets})
+            cap = self.delta_partitions(spark)
+            if bad or len(stats) > cap:
                 import shutil
-                shutil.rmtree(staging, ignore_errors=True)
+                shutil.rmtree(staging.parent, ignore_errors=True)
                 raise ValueError(
                     f"prepartitioned delta violates the bucket contract: "
                     f"out-of-range buckets {bad} (n_buckets={self.n_buckets}), "
-                    f"multi-file buckets {multi} — use "
+                    f"{len(stats)} files for at most {cap} write tasks — use "
                     f"SnapshotTable.prepartition_delta() to build the input")
         new_files: dict[str, list[str]] = {}
+        ranges: dict[str, list[int]] = {}
         offsets: dict[int, int] = {}
         n_keys, seq_min, seq_max = 0, None, None
-        for b, fs, rows, lo, hi, no_stats in stats:
-            if not fs:
-                continue
-            if no_stats:  # rare fallback: one small Spark pass over the gap
-                row = (spark.read.parquet(*no_stats)
+        for f, rows, (blo, bhi), (lo, hi) in stats:
+            if lo is None:  # rare fallback: one small Spark pass over the gap
+                row = (spark.read.parquet(str(f))
                        .agg(F.min(seq_col), F.max(seq_col)).collect()[0])
-                if row[0] is not None:
-                    lo = row[0] if lo is None else min(lo, row[0])
-                    hi = row[1] if hi is None else max(hi, row[1])
-            new_files[str(b)] = fs
+                lo, hi = row[0], row[1]
+            if blo is None:  # no bucket stats: the file may hold any bucket
+                blo, bhi = 0, self.n_buckets - 1
+            rel = str(f.relative_to(self.root))
+            new_files.setdefault(str(blo), []).append(rel)
+            ranges[rel] = [int(blo), int(bhi)]
             n_keys += rows
             if hi is not None:
-                offsets[b] = int(hi)
+                # one seq bound per file: every bucket it covers is applied
+                # up to the file's max (the batch advanced the global
+                # sequence frontier for all of them)
+                for b in range(int(blo), int(bhi) + 1):
+                    offsets[b] = max(offsets.get(b, -1), int(hi))
                 seq_min = int(lo) if seq_min is None else min(seq_min, int(lo))
                 seq_max = int(hi) if seq_max is None else max(seq_max, int(hi))
 
         file_stats = self._merge_file_stats(
             self._collect_file_stats(new_files),
-            self._bloom_stats(delta, new_files))
+            self._bloom_stats(delta, new_files, ranges))
+        for rel, r in ranges.items():
+            file_stats.setdefault(rel, {})[BUCKET_COL] = r
         return {"new_files": new_files, "offsets": offsets, "n_keys": n_keys,
                 "seq_min": seq_min, "seq_max": seq_max,
                 "schema_json": schema_json, "file_stats": file_stats,
@@ -1799,20 +1946,30 @@ class SnapshotTable:
                 out.update(fs)
         return out
 
-    def hot_buckets(self, threshold: int) -> list[int]:
-        """Buckets whose delta-generation count (== file count) has reached
-        ``threshold`` — the compaction work list. O(manifest), no data read."""
+    def hot_buckets(self, threshold: int = COMPACT_EVERY) -> list[int]:
+        """Buckets covered by at least ``threshold`` generations — the
+        compaction work list. A delta generation may be one file spanning
+        many buckets (it counts once in each), or one file per bucket;
+        compaction writes one file per bucket. O(manifest), no data read."""
         m = self._load_state()
         if m is None:
             return []
-        return sorted(int(b) for b, fs in m["files"].items() if len(fs) >= threshold)
+        return [b for b, fs in _coverage(m).items()
+                if len({_generation(f) for f in fs}) >= threshold]
+
+    def compact_hot(self, spark: SparkSession,
+                    threshold: int = COMPACT_EVERY) -> list[int]:
+        """Compact ``hot_buckets(threshold)``; returns the hot buckets, or
+        [] when none were due."""
+        hot = self.hot_buckets(threshold)
+        return hot if hot and self.compact(spark, buckets=hot) else []
 
     def compact(self, spark: SparkSession, key_reduce=None,
                 buckets: list[int] | None = None,
                 cluster_by: list[str] | None = None,
                 cluster_mode: str = "lex",
                 lineage_extra: dict | None = None) -> bool:
-        """Fold a bucket's delta generations into one (LWW-reduced,
+        """Fold a bucket's delta generations into one file (LWW-reduced,
         tombstones retained). ``buckets=None`` compacts the whole table;
         passing ``hot_buckets(threshold)`` makes compaction INCREMENTAL —
         cost O(hot-bucket state), not O(table): only the listed buckets are
@@ -1820,8 +1977,11 @@ class SnapshotTable:
         carries over untouched (the delta manifest records only the replaced
         buckets). At 100 TB with 16k buckets a single hot bucket compacts
         alone in seconds rather than forcing a full-table rewrite.
-        ``key_reduce(df) -> df`` defaults to the engine's LWW kernel.
-        No-op on an empty table or empty bucket list.
+        The listed buckets grow to their closure over spanning delta files
+        (``_closure``): a delta file leaves the table only in the commit
+        that rewrites every bucket it covers, so none of its rows can
+        resurface or vanish. ``key_reduce(df) -> df`` defaults to the
+        engine's LWW kernel. No-op on an empty table or empty bucket list.
 
         ``cluster_by`` sorts each bucket's rows by the given columns before
         the write (Delta OPTIMIZE ZORDER's 1-D analogue): the bucket file's
@@ -1844,8 +2004,9 @@ class SnapshotTable:
         prev = self._load_state()
         if prev is None:
             return False
-        target = sorted(int(b) for b in prev["files"]) if buckets is None else sorted(buckets)
-        target = [b for b in target if str(b) in prev["files"]]
+        live = _coverage(prev)
+        target = sorted(_closure(prev, live if buckets is None
+                                 else [b for b in buckets if b in live]))
         if not target:
             return False
         df = self.read(spark, buckets=target)
@@ -2349,6 +2510,10 @@ class SnapshotTable:
         never affect correctness; fsck reclaims the disk and keeps
         listings honest at scale.
 
+        Also reports ``missing_files``: files a retained manifest
+        references that are not on disk — a table that lost data (never
+        removed, nothing to sweep).
+
         Report-only by default. ``remove=True`` unlinks them and is
         writer-lease-guarded: a LIVE concurrent writer's staged-but-
         unpublished files are indistinguishable from orphans, so only the
@@ -2358,6 +2523,7 @@ class SnapshotTable:
             self._acquire_writer()
             self._guard_recognized_log("fsck")
         referenced = self._referenced_files()
+        missing = sorted(f for f in referenced if not (self.root / f).exists())
         orphans: list[str] = []
         for f in sorted((self.root / "data").rglob("*.parquet")):
             rel = str(f.relative_to(self.root))
@@ -2377,6 +2543,7 @@ class SnapshotTable:
                 if d.is_dir() and not any(d.iterdir()):
                     d.rmdir()
         return {"orphan_files": orphans,
+                "missing_files": missing,
                 "torn_manifests": [p.name for p in torn],
                 "removed": removed}
 
@@ -2511,8 +2678,9 @@ class SnapshotTable:
         return {"deleted_files": deleted, "dropped_manifests": len(dropped)}
 
     def _write_bucketed(self, df: DataFrame, tag: str, touched: list[int]) -> dict[str, list[str]]:
-        """Write one hive partition per touched bucket under data/{tag};
-        returns bucket -> relative file paths."""
+        """Write one hive partition per touched bucket under data/{tag} —
+        the per-bucket (L1) layout of compaction, rebucket and the
+        copy-on-write commit; returns bucket -> relative file paths."""
         staging = self.root / "data" / tag
         df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(staging))
         out: dict[str, list[str]] = {}
@@ -2570,18 +2738,22 @@ class SnapshotTable:
         with ThreadPoolExecutor(min(16, len(rels))) as pool:
             return {rel: st for rel, st in pool.map(one, rels) if st}
 
-    def _bloom_stats(self, df: DataFrame,
-                     new_files: dict[str, list[str]]) -> dict[str, dict]:
+    def _bloom_stats(self, df: DataFrame, new_files: dict[str, list[str]],
+                     ranges: dict[str, list[int]] | None = None
+                     ) -> dict[str, dict]:
         """Per-file Bloom filters for ``bloom_cols``, computed as ONE
         map-side-combining Spark aggregate over the rows being written
-        (O(batch), 32 ``bit_or`` words per column, zero Python in the
-        plan) and keyed to files through the one-file-per-bucket-per-
-        generation layout invariant. Equality reads skip files whose
+        (O(batch), 32 ``bit_or`` words per column per bucket, zero Python
+        in the plan). A file's filter is the OR of the filters of the
+        buckets it covers: its bucket for a per-bucket file, its recorded
+        ``ranges`` entry for a delta file spanning many (whose filter
+        fills faster — sized for one bucket's values, a spanning file
+        skips less, never wrongly). Equality reads skip files whose
         filter proves the value absent — the pruning zone maps cannot do
         for high-cardinality values (commit shas, paths) whose min/max
-        bounds are useless. Opt-in via ``bloom_cols``; a bucket that ever
-        writes >1 file in a generation simply records no filter (lossless:
-        unfiltered files are always scanned)."""
+        bounds are useless. Opt-in via ``bloom_cols``; a bucket that
+        writes >1 per-bucket file in a generation simply records no
+        filter (lossless: unfiltered files are always scanned)."""
         cols = [c for c in self.bloom_cols if c in df.columns]
         if not cols:
             return {}
@@ -2593,18 +2765,26 @@ class SnapshotTable:
                 for w in range(BLOOM_WORDS))
         import base64
 
+        words = {int(r[BUCKET_COL]): {
+                     c: [(r[f"__bf_{c}__{w}"] or 0) & 0xFFFFFFFFFFFFFFFF
+                         for w in range(BLOOM_WORDS)] for c in cols}
+                 for r in df.groupBy(BUCKET_COL).agg(*aggs).collect()}
+        ranges = ranges or {}
         out: dict[str, dict] = {}
-        for r in df.groupBy(BUCKET_COL).agg(*aggs).collect():
-            fs = new_files.get(str(r[BUCKET_COL]), [])
-            if len(fs) != 1:
-                continue
-            per_col = {}
-            for c in cols:
-                words = [(r[f"__bf_{c}__{w}"] or 0) & 0xFFFFFFFFFFFFFFFF
-                         for w in range(BLOOM_WORDS)]
-                raw = b"".join(w.to_bytes(8, "little") for w in words)
-                per_col[c] = base64.b64encode(raw).decode()
-            out[fs[0]] = {"__bloom__": per_col}
+        for b, fs in new_files.items():
+            for f in fs:
+                if f not in ranges and len(fs) != 1:
+                    continue
+                lo, hi = ranges.get(f, (int(b), int(b)))
+                per_col = {}
+                for c in cols:
+                    acc = [0] * BLOOM_WORDS
+                    for x in range(lo, hi + 1):
+                        for w, v in enumerate(words.get(x, {}).get(c, ())):
+                            acc[w] |= v
+                    raw = b"".join(w.to_bytes(8, "little") for w in acc)
+                    per_col[c] = base64.b64encode(raw).decode()
+                out[f] = {"__bloom__": per_col}
         return out
 
     @staticmethod
@@ -2744,7 +2924,7 @@ class SnapshotTable:
         Pure appends against pure appends always pass: the per-bucket LWW
         reduce is order-free and ``_apply_delta`` max-merges offsets and
         watermark, so append commits compose in any order."""
-        replaced = set((files_replace or {}).keys())
+        replaced = {int(b) for b in files_replace or {}}
         for v, _, p in self._log_entries():
             if not (since < v <= upto):
                 continue
@@ -2759,7 +2939,10 @@ class SnapshotTable:
                     f"different bucket layout — re-open the table and re-plan")
             if add_committed and d.get("commit") == batch_id:
                 return "duplicate"
-            touched = set(d.get("files_add", {})) | set(d.get("files_replace", {}))
+            # a spanning delta file touches every bucket it covers
+            touched = set(_coverage({"files": d.get("files_add", {}),
+                                     "file_stats": d.get("file_stats", {})}))
+            touched |= {int(b) for b in d.get("files_replace", {})}
             overlap = replaced & touched
             if overlap:
                 raise ConcurrentWriteConflict(
@@ -2769,10 +2952,12 @@ class SnapshotTable:
         return "ok"
 
     def max_files_per_bucket(self) -> int:
+        """The most files a one-bucket read opens (spanning files count
+        in every bucket they cover)."""
         m = self._load_state()
         if m is None:
             return 0
-        return max((len(fs) for fs in m["files"].values()), default=0)
+        return max((len(fs) for fs in _coverage(m).values()), default=0)
 
     def commit_merged(
         self,
@@ -2788,12 +2973,18 @@ class SnapshotTable:
         """Write ``merged`` (state rows for the touched buckets, including
         the ``__bucket`` column) and atomically publish a new snapshot —
         the copy-on-write commit: each touched bucket's file list is
-        REPLACED (a bucket the batch emptied is dropped).
+        REPLACED (a bucket the batch emptied is dropped). When a delta
+        file spans a touched and an untouched bucket, the touched
+        buckets' closure is compacted first (a logical no-op), so the
+        replace retires only per-bucket files.
 
         Returns False (no-op) if ``batch_id`` was already committed.
         """
         if self.is_committed(batch_id):
             return False
+        m = self._load_state()
+        if m is not None and _closure(m, touched_buckets) != set(touched_buckets):
+            self.compact(merged.sparkSession, buckets=list(touched_buckets))
         # the merged content was computed from the CURRENT head — record it
         # so a raced publish validates interleavings from here, not from
         # whatever head exists after the (long) Spark write

@@ -24,6 +24,14 @@ def test_bloom_prunes_files_and_finds_every_present_value(spark, tmpdir_path):
     t = _table(tmpdir_path)
     rows = [(f"r{i % 4}", f"p{i}", f"sha{i:04d}", i, "U") for i in range(64)]
     t.commit_delta_auto(_df(spark, rows), 0)
+    # one delta file spanning the buckets: its filter is the OR of theirs,
+    # and still finds every present value
+    m = t.latest()
+    assert sum(len(fs) for fs in m["files"].values()) == 1
+    for r in t.read_live(spark).select("path", "commit").collect():
+        got = t.read(spark, eq=("commit", r["commit"]))
+        assert [x["path"] for x in got.collect()] == [r["path"]]
+    t.compact(spark)  # one file per bucket: the filters now prune
     m = t.latest()
     n_files = sum(len(fs) for fs in m["files"].values())
     assert n_files > 1

@@ -137,9 +137,19 @@ def test_point_lookup_scans_one_bucket(spark, tmpdir_path):
     assert [(r["repo"], r["path"], r["seq_no"]) for r in got.collect()] == [
         ("r7", "p7", 7)
     ]
-    # scan is pruned to the key's bucket only
+    # scan is pruned to the files that cover the key's bucket: the one
+    # delta file spans them all; after compaction, the bucket's own file
+    m = t.latest()
+    (l0,) = [f for fs in m["files"].values() for f in fs]
+    lo, hi = m["file_stats"][l0][BUCKET_COL]
+    assert lo <= b <= hi
+    assert {f.removeprefix("file://") for f in got.inputFiles()} == {str(t.root / l0)}
+    t.compact(spark)
+    got = t.lookup(spark, key)
+    assert [(r["repo"], r["seq_no"]) for r in got.collect()] == [("r7", 7)]
     m = t.latest()
     bucket_files = {str(t.root / f) for f in m["files"][str(b)]}
+    assert len(bucket_files) == 1
     assert {f.removeprefix("file://") for f in got.inputFiles()} == bucket_files
 
     with pytest.raises(ValueError, match="missing key columns"):

@@ -75,7 +75,8 @@ def test_cli_full_lifecycle(spark, tmpdir_path, capsys):
 
     assert main(["fsck", "--table", tbl]) == 0
     fs = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert fs == {"orphan_files": [], "torn_manifests": [], "removed": 0}
+    assert fs == {"orphan_files": [], "missing_files": [],
+                  "torn_manifests": [], "removed": 0}
 
     # tag the current snapshot, restore to it after nothing changed (no-op
     # diff), then drop the tag
@@ -114,7 +115,7 @@ def test_cli_stream_reports_events(spark, tmpdir_path, capsys):
     wal, tbl = f"{tmpdir_path}/wal", f"{tmpdir_path}/tbl"
     assert main(["gen", "--wal", wal, "--events", "3000", "--repos", "8",
                  "--files", "4"]) == 0
-    capsys.readouterr()
+    gen = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert main(["stream", "--wal", wal, "--table", tbl, "--cores", "8",
                  "--files-per-batch", "2"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -122,6 +123,8 @@ def test_cli_stream_reports_events(spark, tmpdir_path, capsys):
     # every WAL row, redelivered copies included
     assert out["n_events"] == sum(pq.ParquetFile(f).metadata.num_rows
                                   for f in Path(wal).glob("*.parquet"))
+    # gen reports the rows it wrote, not the --events it was asked for
+    assert gen["events"] == out["n_events"] > 3000
     assert out["events_per_s"] > 0
 
 

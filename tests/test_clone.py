@@ -75,6 +75,12 @@ def test_clone_carries_layout_and_stats_config(spark, tmpdir_path):
     src.commit_delta_auto(
         _df(spark, [(f"r{i}", f"p{i}", i, "U") for i in range(16)])
         .withColumn(BUCKET_COL, bucket_expr(["repo", "path"], 8)), 0)
+    # the one delta file's bucket range travels with the clone
+    l0 = src.clone_to(f"{tmpdir_path}/l0")
+    for b in range(8):
+        assert l0.read(spark, buckets=[b]).count() == \
+            src.read(spark, buckets=[b]).count()
+    src.compact(spark)  # one file per bucket: the Bloom filters prune
     clone = src.clone_to(f"{tmpdir_path}/dev")
     assert clone.n_buckets == 8
     assert clone.stats_cols == ["seq_no"] and clone.bloom_cols == ["repo"]
@@ -84,7 +90,7 @@ def test_clone_carries_layout_and_stats_config(spark, tmpdir_path):
     n_files = sum(len(fs) for fs in clone.latest()["files"].values())
     assert len(hit.inputFiles()) < n_files
     # branch-point lineage is recorded under the clone manifest
-    assert clone.manifest_at(0)["lineage"]["clone"]["clone_source_version"] == 0
+    assert clone.manifest_at(0)["lineage"]["clone"]["clone_source_version"] == 1
 
 
 def test_clone_refuses_nonempty_target_and_empty_source(spark, tmpdir_path):

@@ -145,6 +145,10 @@ def test_purge_where_matches_live_winners(spark, tmpdir_path):
 
 def test_purge_untouched_buckets_survive_byte_identical(spark, tmpdir_path):
     t = _mk(spark, tmpdir_path)
+    # the delta files span both buckets, so a purge must rewrite both (its
+    # closure); once compaction wrote one file per bucket, only alice's
+    # bucket is rewritten
+    t.compact(spark)
     m0 = t.latest()
     kdf = spark.createDataFrame([("alice", "a.py")], "repo string, path string")
     b_alice = t.key_bucket(spark, {"repo": "alice", "path": "a.py"})

@@ -227,3 +227,31 @@ def test_vacuumed_cursor_version_raises(spark, tmpdir_path):
         view.refresh(spark)
     assert view.cursor == 0
     assert _view_rows(spark, view) == before
+
+
+def test_views_compact_their_own_tables(spark, tmpdir_path):
+    """Every refresh commits one generation to the view buckets it
+    touches; the views compact their tables' hot buckets at the ingest
+    cadence, so a view read stays bounded across refreshes."""
+    from omop_meds_spark.operators.incremental import SCD2View
+    from omop_meds_spark.table import COMPACT_EVERY
+
+    tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=4)
+    view = IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"],
+                              sum_cols=["val"], n_buckets=4)
+    hist = SCD2View(f"{tmpdir_path}/hist", tbl, n_buckets=4)
+    for b in range(12):
+        _commit(spark, tbl, b, [(f"k{(b * 3 + i) % 20}", f"g{i % 6}",
+                                 float(b + i), 100 * b + i, "D" if i == 4 else "U")
+                                for i in range(6)])
+        assert view.refresh(spark)
+        assert hist.refresh(spark)
+    assert COMPACT_EVERY == 8
+    assert 1 <= view.table.max_files_per_bucket() <= COMPACT_EVERY
+    assert 1 <= hist.table.max_files_per_bucket() <= COMPACT_EVERY
+    assert view.table.hot_buckets() == hist.table.hot_buckets() == []
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+    # one history row per key ever written, each entry one commit of it
+    log = hist.read_log(spark).collect()
+    assert {r["k"] for r in log} == {f"k{i}" for i in range(20)}
+    assert len(log) == len(tbl.read_changes(spark, -1).collect())

@@ -5,8 +5,8 @@ take the recorded file schema instead of a schema-merge job (also across
 a column add and an int -> bigint widening, before and after compaction,
 and across a struct widening inside an SCD2 view's history),
 a point lookup and one incremental view fold stay within their measured
-job budgets. Jobs are counted per call with ``setJobGroup`` +
-``statusTracker``."""
+job budgets, and a one-file batch writes one data file per table. Jobs
+are counted per call with ``setJobGroup`` + ``statusTracker``."""
 
 from __future__ import annotations
 
@@ -111,10 +111,11 @@ def test_key_bucket_runs_no_spark_job(spark, tmpdir_path):
 
 def test_wide_read_launches_no_listing_job(spark, tmpdir_path):
     t = SnapshotTable(f"{tmpdir_path}/t", ["k"], n_buckets=32)
-    for b in range(2):
-        t.commit_delta_auto(spark.createDataFrame(
+    for b in range(2):  # one file per bucket and generation: 64 files
+        d = spark.createDataFrame(
             [(f"k{i}", "g", 1.0, b * 1000 + i, "U") for i in range(400)],
-            SCHEMA), b)
+            SCHEMA).withColumn(BUCKET_COL, bucket_expr(["k"], 32))
+        t.commit_delta(d, b, list(range(32)), b * 1000 + 399)
     assert sum(len(fs) for fs in t.latest()["files"].values()) > 32
     live, jobs = _jobs(spark, lambda: t.read_live(spark).count())
     assert live == 400
@@ -132,7 +133,7 @@ def test_refresh_job_budget(spark, tmpdir_path):
     t.commit_delta_auto(spark.createDataFrame(
         [(f"k{i}", f"g{i % 7}", float(i), 1000 + i, "U")
          for i in range(0, 800, 2)], SCHEMA), 1)
-    assert all(len(fs) == 2 for fs in t.latest()["files"].values())
+    assert t.hot_buckets(2) == list(range(32))  # two generations each
     ok, jobs = _jobs(spark, lambda: view.refresh(spark))
     assert ok
     assert len(jobs) <= REFRESH_JOB_BUDGET, jobs
@@ -151,6 +152,36 @@ def test_lookup_job_budget(spark, tmpdir_path):
     rows, jobs = _jobs(spark, lambda: t.lookup(spark, {"k": "k7"}).collect())
     assert [(r["k"], r["val"]) for r in rows] == [("k7", 1.0)]
     assert len(jobs) <= LOOKUP_JOB_BUDGET, jobs
+
+
+def test_small_batch_file_budget(spark, tmpdir_path):
+    """A one-WAL-file batch over a preloaded 32-bucket table writes one
+    level-0 file per table, though it touches every bucket of both (one
+    file per touched bucket wrote 64)."""
+    from omop_meds_spark.runner import CDCRunner
+    from omop_meds_spark.sources.gen import generate_wal
+
+    wal = f"{tmpdir_path}/wal"
+    generate_wal(wal, n_events=6000, n_repos=20, paths_per_repo=100,
+                 n_files=6, seed=29)
+    r = CDCRunner(spark, wal, f"{tmpdir_path}/t", n_buckets=32,
+                  files_per_batch=5)
+    preload, segment = r.reader.plan_batches()
+    assert len(segment.files) == 1
+    r.apply_batch(preload)
+
+    def data_files():
+        return {p for t in (r.table, r.meds_table)
+                for p in (t.root / "data").rglob("*.parquet")}
+
+    before = data_files()
+    assert r.write_tasks(segment) == 1
+    r.apply_batch(segment)
+    assert len(data_files() - before) == 2
+    for t in (r.table, r.meds_table):
+        assert t.changed_buckets(t.version - 1) == list(range(32))
+        listed = [f for fs in t.latest()["files"].values() for f in fs]
+        assert len(listed) == len(set(listed)) == 2
 
 
 def _schema_of(df) -> dict:

@@ -130,8 +130,11 @@ def test_point_lookup_pushes_key_predicate(spark, tmpdir_path):
     assert "PushedFilters" in plan and "repo" in plan
     m = t.latest()
     b = t.key_bucket(spark, {"repo": "r3", "path": "p3"})
-    # single-generation bucket → fast path: no LWW exchange either
-    assert len(m["files"][str(b)]) == 1 and _exchanges(plan) == 0
+    # one delta file covers the bucket (its rows filtered to it) →
+    # single-generation fast path: no LWW exchange either
+    (f,) = [f for fs in m["files"].values() for f in fs]
+    lo, hi = m["file_stats"][f]["__bucket"]
+    assert lo <= b <= hi and _exchanges(plan) == 0
 
 
 def test_minhash_lsh_single_signature_subtree(spark):

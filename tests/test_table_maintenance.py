@@ -423,7 +423,8 @@ def test_fsck_reports_and_reclaims_crashed_write_residue(spark, tmpdir_path):
         t.commit_delta(d, i, _touched(d), i)
     want = _live_rows(spark, t)
     # clean table: nothing to report
-    assert t.fsck() == {"orphan_files": [], "torn_manifests": [], "removed": 0}
+    assert t.fsck() == {"orphan_files": [], "missing_files": [],
+                        "torn_manifests": [], "removed": 0}
     # simulate a writer that crashed after staging parquet but before its
     # manifest publish: an unreferenced file in a bucket dir + a torn tmp
     # manifest in the log
@@ -440,7 +441,8 @@ def test_fsck_reports_and_reclaims_crashed_write_residue(spark, tmpdir_path):
     # remove: unlinks both; a second pass is clean and state is intact
     rep2 = t.fsck(remove=True)
     assert rep2["removed"] == 2 and not orphan.exists()
-    assert t.fsck() == {"orphan_files": [], "torn_manifests": [], "removed": 0}
+    assert t.fsck() == {"orphan_files": [], "missing_files": [],
+                        "torn_manifests": [], "removed": 0}
     assert _live_rows(spark, t) == want
 
 
@@ -674,7 +676,7 @@ def test_prepartitioned_commit_matches_default_path(spark, tmpdir_path):
     """commit_delta_auto(prepartitioned=True) — the runner's exchange-free
     hot path (the winners cache is already bucket-hash-partitioned) — must
     produce a byte-equivalent table to the default path: same live rows,
-    same one-file-per-bucket layout, same per-bucket offsets/watermark."""
+    same one-file-per-write-task layout, same per-bucket offsets/watermark."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -697,7 +699,7 @@ def test_prepartitioned_commit_matches_default_path(spark, tmpdir_path):
     assert ma["watermark_seq"] == mb["watermark_seq"]
     fa, fb = ma["files"], mb["files"]
     assert {b: len(v) for b, v in fa.items()} == {b: len(v) for b, v in fb.items()}
-    # one-file-per-bucket invariant survives the skipped repartition
+    # one file per write task survives the skipped repartition
     assert all(len(v) == 1 for v in fb.values())
 
     # guard: the caller's contract is BUCKET_COL present
@@ -710,6 +712,11 @@ def test_prepartitioned_commit_matches_default_path(spark, tmpdir_path):
         4, F.col(BUCKET_COL))
     with pytest.raises(ValueError, match="out-of-range"):
         tb.commit_delta_auto(stale, 1, prepartitioned=True)
+    # guard: a frame not partitioned into write tasks writes a file per
+    # input partition, more than any delta commit may
+    scattered = plain.withColumn(BUCKET_COL, bucket_expr(KEYS, 4)).repartition(16)
+    with pytest.raises(ValueError, match="write tasks"):
+        tb.commit_delta_auto(scattered, 1, prepartitioned=True)
     assert tb.version == 0  # nothing published, staging cleaned
     assert _live_rows(spark, tb) == _live_rows(spark, ta)
 
