@@ -251,7 +251,7 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"files": None}))
             return 0
         cols = ("bucket", "path", "generation", "rows", "bytes",
-                "row_groups", "stats", "last_bucket")
+                "row_groups", "stats", "buckets")
         if args.summary:
             for r in SnapshotTable.partition_rows(rows):
                 print(json.dumps(dict(zip(

@@ -123,7 +123,7 @@ def merge_commit_target(
     lineage: dict,
     schema_json: str | None = None,
     prepartitioned: bool = False,
-    write_tasks: int = 1,
+    input_bytes: int | None = None,
 ) -> dict:
     """Commit a per-key delta (one winner row per key, CDC envelope intact)
     into a snapshot table — the shared kernel behind both the source-mirror
@@ -131,13 +131,14 @@ def merge_commit_target(
     are appended as a new delta generation, NO state read, NO rewrite
     (write amplification O(batch), not O(state)); ``SnapshotTable.compact``
     periodically folds generations and ``read_live`` LWW-reduces. The
-    delta lands as ``write_tasks`` files (one level-0 file per task,
-    spanning the buckets its rows fall in). Bucket stats / offsets /
+    delta lands as one level-0 file per write task, each spanning the
+    buckets its rows fall in; ``input_bytes`` (the source bytes the delta
+    was computed from) sizes the task count. Bucket stats / offsets /
     watermark come from the written parquet footers
     (``commit_delta_auto``) — the write is the ONLY Spark action."""
     st = table.commit_delta_auto(
         delta, batch_id, lineage=lineage, schema_json=schema_json,
-        prepartitioned=prepartitioned, write_tasks=write_tasks,
+        prepartitioned=prepartitioned, input_bytes=input_bytes,
     )
     if st is None:
         return {"n_keys": 0, "seq_min": None, "seq_max": table.watermark(),
@@ -281,17 +282,6 @@ class CDCRunner:
         self.metrics: list[dict] = []
 
     # ------------------------------------------------------------- stages
-    def write_tasks(self, batch: WalBatch) -> int:
-        """Write tasks (= level-0 files per target) for the batch's delta
-        commits: one per ``spark.sql.files.maxPartitionBytes`` of WAL
-        input — the split size the session's scan of the same files
-        uses — capped at ``delta_partitions()``. A tail segment or a
-        catch-up batch of a few MB writes one file per table; a multi-GB
-        replay batch keeps the full write parallelism."""
-        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        size = sum(Path(f).stat().st_size for f in batch.files)
-        return max(1, min(self.table.delta_partitions(self.spark), -(-size // split)))
-
     def apply_batch(self, batch: WalBatch) -> dict | None:
         """Apply one micro-batch to BOTH targets; returns metrics dict, or
         None if the batch was already fully committed (idempotent replay).
@@ -346,25 +336,28 @@ class CDCRunner:
         # regex + Arrow-UDF work AND the shuffle payload by that factor.
         #
         # The winners are REPARTITIONED BY THE STATE TABLE'S BUCKET before
-        # normalize + persist: the cache then stores one bucket-aligned
-        # partition per write task (write_tasks(), not shuffle.partitions
+        # normalize + persist: the cache then stores few bucket-aligned
+        # partitions (delta_partitions()-sized, not shuffle.partitions
         # wide), the state write runs exchange-free straight from the cache
-        # (prepartitioned=True skips the commit's own repartition), the
-        # MEDS job re-reads write_tasks() cache blocks instead of 64,
-        # and the normalize columns are computed AFTER the exchange so they
-        # never transit a shuffle. Net effect per batch: one fewer exchange
-        # and ~4x fewer hot-loop tasks — serial driver/scheduler cost is
-        # what caps N→4N scaling efficiency, so the fixed overhead matters
-        # as much as the scan math. prepartition_delta is the TABLE's
+        # (prepartitioned=True: the commit coalesces whole partitions into
+        # its write tasks instead of repartitioning), the MEDS job re-reads
+        # delta_partitions() cache blocks instead of 64, and the normalize
+        # columns are computed AFTER the exchange — in parallel, however
+        # few files the commits write — so they never transit a shuffle.
+        # Net effect per batch: one fewer exchange and ~4x fewer hot-loop
+        # tasks — serial driver/scheduler cost is what caps N→4N scaling
+        # efficiency, so the fixed overhead matters as much as the scan
+        # math. prepartition_delta is the TABLE's
         # method, not inline bucket math: the layout (key_cols, n_buckets)
         # is the table's to own, so a mid-lifetime rebucket() can never
         # desynchronize the stamp from the write.
-        tasks = self.write_tasks(batch)
-        lww = self.table.prepartition_delta(last_writer_wins(events, KEY_COLS),
-                                            tasks)
+        lww = self.table.prepartition_delta(last_writer_wins(events, KEY_COLS))
         winners = normalize_events(lww).persist()
         try:
             lineage = {"files": list(batch.files), "schema_version": self.registry.version}
+            # the WAL bytes size both commits' write tasks: the cached
+            # winners no longer name the files they came from
+            wal_bytes = sum(Path(f).stat().st_size for f in batch.files)
             if self.dlq:
                 lineage["dlq_rows"] = n_quarantined
             # TWO Spark actions per batch, submitted CONCURRENTLY: the
@@ -382,20 +375,22 @@ class CDCRunner:
                     merge_commit_target, self.spark, self.table, winners,
                     batch.batch_id, lineage, self.registry.schema_json(),
                     True,  # prepartitioned: winners cache is bucket-aligned
+                    wal_bytes,
                 )
                 f_meds = pool.submit(
                     merge_commit_target, self.spark, self.meds_table,
                     change_winners_to_meds(winners), batch.batch_id,
-                    {**lineage, "target": "meds"}, write_tasks=tasks,
+                    {**lineage, "target": "meds"}, input_bytes=wal_bytes,
                 )
                 stats = f_state.result()
                 f_meds.result()
             # footer-only count — no extra Spark pass over the batch
             n_events = self.reader.footer_rows(batch)
             # incremental compaction: only buckets whose generation count
-            # hit the threshold are read + rewritten (O(hot buckets), not
-            # O(table) — a hot key can no longer trigger full-table rewrites
-            # from the hot loop)
+            # hit the threshold are read + merged; the delta files holding
+            # them are split into per-bucket files for their other buckets
+            # (SnapshotTable.compact: O(hot-bucket state + those files'
+            # rows), not O(table))
             for t in (self.table, self.meds_table):
                 try:
                     t.compact_hot(self.spark, self.compact_every)

@@ -19,9 +19,10 @@ buckets it touches; compaction, rebucket and purge write one file per
 bucket. A delta generation may therefore be one file spanning many
 buckets; compaction writes one file per bucket. The files map lists each
 live file exactly once, under the lowest bucket it covers, and a
-spanning file records the bucket range it covers as the zone map of the
-bucket column (``file_stats[f]["__bucket"] = [lo, hi]``). A file with no
-recorded range covers exactly the bucket it is listed under.
+spanning file records the exact set of buckets it holds rows of
+(``file_stats[f]["__buckets__"]``, sorted inclusive runs), so bucket
+pruning, change tracking and compaction planning stay per bucket. A file
+with no recorded set covers exactly the bucket it is listed under.
 
 DELTA-ENCODED LOG (the 100 TB-critical part): a commit writes a manifest
 whose size is O(batch), never O(table):
@@ -83,10 +84,17 @@ Scale notes (100 TB design):
   its size, not ``n_buckets``, so per-batch write amplification is
   bounded by the batch, not the table. At 100 TB you raise ``n_buckets``
   (e.g. 16k) so a bucket stays a few GB; commit cost stays O(batch) in
-  manifest bytes because only the commit's own files are written.
+  manifest bytes because only the commit's own files (and their bucket
+  sets) are written.
 * The manifest drives partition pruning: reading N buckets touches exactly
-  the files that cover them (a spanning file is filtered to the asked-for
-  buckets); no directory listing of the whole table.
+  the files that hold rows of them (a spanning file is filtered to the
+  asked-for buckets); no directory listing of the whole table.
+* Compaction is incremental: a hot bucket's state is merged; the other
+  buckets that the delta files holding it also hold are split — those
+  files' rows for them become one per-bucket file each, beside their
+  untouched older files (``compact``). Its cost is the hot buckets' state
+  plus the rows of the retired delta files, not the state of every bucket
+  those deltas touched.
 """
 
 from __future__ import annotations
@@ -116,6 +124,14 @@ MAINT_BATCH_BASE = 1 << 40
 #: generation depth at which a bucket is compacted: ``CDCRunner`` and the
 #: incremental views fold their tables' hot buckets at this cadence
 COMPACT_EVERY = 8
+
+#: ``file_stats`` key under which a delta (L0) file records the exact set
+#: of buckets it holds rows of, as sorted inclusive runs (``_runs``)
+BUCKETS_STAT = "__buckets__"
+
+#: ``spark.sql.files.maxPartitionBytes``' own default, for a session that
+#: leaves it unset
+_DEFAULT_SPLIT = "128m"
 
 _LOG_RE = re.compile(r"^v(\d{8})-(ckpt|delta)\.json$")
 
@@ -532,35 +548,67 @@ def _absorb(hwm: int, extra: set[int], batch_id: int) -> tuple[int, set[int]]:
     return hwm, extra
 
 
-def _file_range(m: dict, b: str, f: str) -> tuple[int, int]:
-    """The buckets ``[lo, hi]`` that file ``f``, listed under bucket ``b``
-    of manifest ``m``, may hold rows of: a spanning (L0) file records
-    them as the zone map of the bucket column; a file with none holds
-    exactly bucket ``b``.
+def _byte_size(s: str) -> int:
+    """A Spark byte-size setting (``"16m"``, ``"128MB"``, ``"1048576b"``,
+    ``"4096"``) in bytes.
 
-    >>> m = {"file_stats": {"l0.parquet": {"__bucket": [0, 5]}}}
-    >>> _file_range(m, "0", "l0.parquet"), _file_range(m, "3", "b3.parquet")
-    ((0, 5), (3, 3))
+    >>> _byte_size("16m"), _byte_size("128MB"), _byte_size("4096")
+    (16777216, 134217728, 4096)
     """
-    r = m.get("file_stats", {}).get(f, {}).get(BUCKET_COL)
-    return (int(r[0]), int(r[1])) if r else (int(b), int(b))
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", str(s).lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {s!r}")
+    return int(m.group(1)) << (10 * " kmgtp".index(m.group(2) or " "))
+
+
+def _runs(buckets) -> list[list[int]]:
+    """A bucket set as sorted inclusive runs ``[[lo, hi], ...]`` — the
+    form a delta file's exact bucket set takes in ``file_stats`` (one run
+    when a file holds a contiguous block, one short run per bucket when it
+    holds a few scattered ones).
+
+    >>> _runs([9, 0, 1, 2, 7, 8, 2])
+    [[0, 2], [7, 9]]
+    """
+    out: list[list[int]] = []
+    for b in sorted({int(x) for x in buckets}):
+        if out and out[-1][1] == b - 1:
+            out[-1][1] = b
+        else:
+            out.append([b, b])
+    return out
+
+
+def _file_buckets(m: dict, b: str, f: str) -> list[int]:
+    """The buckets that file ``f``, listed under bucket ``b`` of manifest
+    ``m``, holds rows of: a delta (L0) file records its exact set as runs
+    under ``file_stats[f][BUCKETS_STAT]``; a file with none holds exactly
+    bucket ``b``.
+
+    >>> m = {"file_stats": {"l0.parquet": {BUCKETS_STAT: [[0, 1], [5, 5]]}}}
+    >>> _file_buckets(m, "0", "l0.parquet"), _file_buckets(m, "3", "b3.parquet")
+    ([0, 1, 5], [3])
+    """
+    runs = m.get("file_stats", {}).get(f, {}).get(BUCKETS_STAT)
+    if not runs:
+        return [int(b)]
+    return [x for lo, hi in runs for x in range(int(lo), int(hi) + 1)]
 
 
 def _coverage(m: dict, buckets=None) -> dict[int, list[str]]:
-    """bucket -> the live files that may hold its rows, for every covered
+    """bucket -> the live files that hold its rows, for every covered
     bucket (or only those in ``buckets``).
 
     >>> m = {"files": {"0": ["l0.parquet"], "2": ["b2.parquet"]},
-    ...      "file_stats": {"l0.parquet": {"__bucket": [0, 2]}}}
+    ...      "file_stats": {"l0.parquet": {BUCKETS_STAT: [[0, 0], [2, 3]]}}}
     >>> _coverage(m)
-    {0: ['l0.parquet'], 1: ['l0.parquet'], 2: ['l0.parquet', 'b2.parquet']}
+    {0: ['l0.parquet'], 2: ['l0.parquet', 'b2.parquet'], 3: ['l0.parquet']}
     """
     wanted = None if buckets is None else set(buckets)
     out: dict[int, list[str]] = {}
     for b, fs in m["files"].items():
         for f in fs:
-            lo, hi = _file_range(m, b, f)
-            for x in range(lo, hi + 1):
+            for x in _file_buckets(m, b, f):
                 if wanted is None or x in wanted:
                     out.setdefault(x, []).append(f)
     return dict(sorted(out.items()))
@@ -573,25 +621,29 @@ def _generation(f: str) -> str:
 
 
 def _closure(m: dict, buckets) -> set[int]:
-    """``buckets`` grown until no live file spans its edge — the buckets a
-    rewrite must cover so that every spanning file it retires is rewritten
-    whole (a spanning file leaves the files map only with every bucket it
-    covers).
+    """``buckets`` grown until every live file that holds rows of one of
+    them holds rows of none outside — the buckets a rewrite must cover so
+    that every spanning file it retires is rewritten whole (a spanning
+    file leaves the files map only with every bucket it holds). The
+    closure is the union of the overlapping delta files' exact bucket
+    sets: it grows with the buckets recent deltas touched, not with the
+    table.
 
-    >>> m = {"files": {"0": ["a"], "4": ["b"], "6": ["c"]},
-    ...      "file_stats": {"a": {"__bucket": [0, 4]}, "b": {"__bucket": [4, 5]}}}
-    >>> sorted(_closure(m, [2])), sorted(_closure(m, [6]))
-    ([0, 1, 2, 3, 4, 5], [6])
+    >>> m = {"files": {"0": ["a"], "4": ["b"], "6": ["c"], "7": ["d"]},
+    ...      "file_stats": {"a": {BUCKETS_STAT: [[0, 0], [4, 4]]},
+    ...                     "b": {BUCKETS_STAT: [[4, 5]]},
+    ...                     "d": {BUCKETS_STAT: [[7, 9]]}}}
+    >>> sorted(_closure(m, [0])), sorted(_closure(m, [2])), sorted(_closure(m, [6]))
+    ([0, 4, 5], [2], [6])
     """
     out = set(buckets)
-    spans = [r for b, fs in m["files"].items() for f in fs
-             for r in [_file_range(m, b, f)] if r[1] > r[0]]
+    spans = [s for b, fs in m["files"].items() for f in fs
+             for s in [set(_file_buckets(m, b, f))] if len(s) > 1]
     grew = True
     while grew:
         grew = False
-        for lo, hi in spans:
-            span = set(range(lo, hi + 1))
-            if span & out and not span <= out:
+        for span in spans:
+            if not span.isdisjoint(out) and not span <= out:
                 out |= span
                 grew = True
     return out
@@ -618,9 +670,9 @@ def _apply_delta(state: dict, d: dict) -> dict:
     {}
     >>> s3 = _apply_delta(s2, {"version": 2, "batch_id": 9,
     ...     "files_add": {"0": ["l0.parquet"]},
-    ...     "file_stats": {"l0.parquet": {"__bucket": [0, 3]}}})
-    >>> s3["files"], s3["file_stats"]   # one listing, its range in stats
-    ({'0': ['l0.parquet']}, {'l0.parquet': {'__bucket': [0, 3]}})
+    ...     "file_stats": {"l0.parquet": {BUCKETS_STAT: [[0, 1], [3, 3]]}}})
+    >>> s3["files"], s3["file_stats"]   # one listing, its buckets in stats
+    ({'0': ['l0.parquet']}, {'l0.parquet': {'__buckets__': [[0, 1], [3, 3]]}})
     >>> _apply_delta(s3, {"version": 3, "batch_id": 9,
     ...     "files_replace": {str(b): [] for b in range(4)}})["file_stats"]
     {}
@@ -633,8 +685,8 @@ def _apply_delta(state: dict, d: dict) -> dict:
             files[b] = list(fs)
         else:
             files.pop(b, None)
-    # zone maps (and a spanning file's bucket range, the zone map of the
-    # bucket column) ride along with the files they describe: merge this
+    # zone maps (and a spanning file's bucket set) ride along with the
+    # files they describe: merge this
     # delta's per-file bounds, then keep stats only for LIVE files (replace
     # / compaction retires the old generations' stats with the files)
     file_stats = {**state.get("file_stats", {}), **d.get("file_stats", {})}
@@ -692,11 +744,11 @@ class SnapshotTable:
     File layout invariant: a delta generation may be one file spanning
     many buckets; compaction writes one file per bucket. A delta commit
     writes one (L0) file per write task, rows sorted by bucket and then
-    key, and records each file's bucket range; ``compact``, ``rebucket``
-    and ``purge_*`` write one (L1) file per bucket, and retire a spanning
-    file only in a commit that rewrites every bucket it covers. Readers
-    resolve a bucket to the files that cover it and filter a spanning
-    file's rows to the buckets asked for."""
+    key, and records the exact set of buckets each file holds;
+    ``compact``, ``rebucket`` and ``purge_*`` write one (L1) file per
+    bucket, and retire a spanning file only in a commit that rewrites
+    every bucket it holds. Readers resolve a bucket to the files that hold
+    it and filter a spanning file's rows to the buckets asked for."""
 
     def __init__(self, root: str | Path, key_cols: list[str],
                  n_buckets: int | None = None, checkpoint_every: int = 16,
@@ -1046,10 +1098,10 @@ class SnapshotTable:
             # data/{generation-tag}/{__bucket={b} | l0}/part-*.parquet
             parts = rel.split("/")
             gen = parts[1] if len(parts) > 2 and parts[0] == "data" else ""
-            lo, hi = _file_range(m, b, rel)
-            return (lo, rel, gen, int(md.num_rows),
+            bs = _file_buckets(m, b, rel)
+            return (bs[0], rel, gen, int(md.num_rows),
                     int(p.stat().st_size), int(md.num_row_groups),
-                    json.dumps(stats.get(rel, {}), sort_keys=True), hi)
+                    json.dumps(stats.get(rel, {}), sort_keys=True), bs)
 
         pairs = [(b, f)
                  for b, fs in sorted(m["files"].items(), key=lambda kv: int(kv[0]))
@@ -1060,14 +1112,14 @@ class SnapshotTable:
             return list(ex.map(lambda bf: one(*bf), pairs))
 
     FILES_SCHEMA = ("bucket int, path string, generation string, rows long, "
-                    "bytes long, row_groups int, stats string, last_bucket int")
+                    "bytes long, row_groups int, stats string, buckets array<int>")
 
     def files(self, spark: SparkSession, version: int | None = None,
               ref: str | None = None) -> DataFrame | None:
         """Iceberg ``db.table.files`` metadata-table analogue: one row per
-        LIVE data file in the snapshot — the buckets it covers
-        (``bucket`` to ``last_bucket``: equal for a per-bucket file, a
-        range for a delta file spanning many buckets), generation (the
+        LIVE data file in the snapshot — the lowest bucket it covers
+        (``bucket``) and all of them (``buckets``: one for a per-bucket
+        file, the exact set for a delta file spanning many), generation (the
         commit or compaction tag that wrote the file), relative path,
         parquet footer row count, on-disk bytes, row-group count, and the
         file's recorded zone-map bounds as JSON. ``version=`` / ``ref=``
@@ -1111,8 +1163,8 @@ class SnapshotTable:
     def partition_rows(file_rows: list[tuple]) -> list[tuple]:
         """The ``PARTITIONS_SCHEMA`` rollup of ``_file_rows`` output."""
         agg: dict[int, list] = {}
-        for lo, _rel, gen, nrows, nbytes, _rg, _st, hi in file_rows:
-            for b in range(lo, hi + 1):
+        for _b, _rel, gen, nrows, nbytes, _rg, _st, bs in file_rows:
+            for b in bs:
                 a = agg.setdefault(b, [0, set(), 0, 0])
                 a[0] += 1
                 a[1].add(gen)
@@ -1239,10 +1291,10 @@ class SnapshotTable:
         no recorded filter are scanned, and the exact predicate still
         applies to survivors.
 
-        ``buckets=`` opens every file that covers one of them; when a
-        delta file spanning other buckets is among them, its rows are
-        filtered to the asked-for buckets, so the frame holds exactly
-        their rows."""
+        ``buckets=`` opens exactly the files that hold rows of one of
+        them (a delta file records its exact bucket set); when such a file
+        also holds other buckets, its rows are filtered to the asked-for
+        ones, so the frame holds exactly their rows."""
         version = self._resolve_version(version, ref)
         m = self._load_state(version)
         if m is None:
@@ -1271,11 +1323,10 @@ class SnapshotTable:
         for b, fs in m["files"].items():
             for f in fs:
                 if wanted is not None:
-                    lo, hi = _file_range(m, b, f)
-                    span = range(lo, hi + 1)
-                    if not any(x in wanted for x in span):
+                    held = _file_buckets(m, b, f)
+                    if wanted.isdisjoint(held):
                         continue
-                    spill = spill or not all(x in wanted for x in span)
+                    spill = spill or not wanted.issuperset(held)
                 fst = stats.get(f, {})
                 if between is not None and not _stats_overlap(
                         fst.get(col), jlo, jhi):
@@ -1283,23 +1334,31 @@ class SnapshotTable:
                 if bloom_pos is not None and _bloom_excludes(
                         fst.get("__bloom__", {}).get(col), bloom_pos):
                     continue
-                files.append(str(self.root / f))
+                files.append(f)
         if not files:
             return None
+        df = self._scan(spark, m, files, wanted if spill else None)
+        if between is not None:
+            df = self._between_filter(df, *between)
+        return df
+
+    def _scan(self, spark: SparkSession, m: dict, files: list[str],
+              buckets=None) -> DataFrame:
+        """The rows of data files ``files`` (relative paths) of manifest
+        ``m``, with the bucket column, only those of ``buckets`` if given."""
         # Direct-file reads skip hive partition discovery, so the bucket
         # column is re-derived from the keys (same deterministic hash; a
         # delta file's own copy of it is not in the recorded schema).
         # A bucket's delta generations may span schema versions (merge-on-
         # read): the recorded live schema is their union, missing → null.
-        df = _parquet_reader(spark, m.get("data_schema")).parquet(*files).withColumn(
+        df = _parquet_reader(spark, m.get("data_schema")).parquet(
+            *[str(self.root / f) for f in files]).withColumn(
             # derive with the layout the MANIFEST was written under, so a
             # time-travel read across a rebucket still groups coherently
             BUCKET_COL, bucket_expr(self.key_cols, m.get("n_buckets", self.n_buckets))
         )
-        if spill:
-            df = df.filter(F.col(BUCKET_COL).isin(sorted(wanted)))
-        if between is not None:
-            df = self._between_filter(df, *between)
+        if buckets is not None:
+            df = df.filter(F.col(BUCKET_COL).isin(sorted(buckets)))
         return df
 
     def read_live(self, spark: SparkSession, buckets: list[int] | None = None,
@@ -1455,7 +1514,7 @@ class SnapshotTable:
         """The buckets that the files added by commits in
         ``(since_version, to_version]`` cover — where every row of
         ``read_changes`` over the same range lives (a spanning delta file
-        names its whole recorded range) — from the manifests alone, with
+        names its exact recorded bucket set) — from the manifests alone, with
         no Spark job. None when a commit in the range was written under
         another bucket layout (a rebucket in between), whose ids do not
         address this one. Raises like ``read_changes`` on a vacuumed
@@ -1589,29 +1648,56 @@ class SnapshotTable:
 
     def delta_partitions(self, spark: SparkSession) -> int:
         """The most write tasks a delta commit uses: enough for
-        parallelism, no more. A delta commit writes one file per task, so
-        callers size a small batch below it (``CDCRunner`` takes one task
-        per scan split of WAL input); each bucket's rows still land in
-        one task, because the delta is hash-partitioned on the bucket."""
+        parallelism, no more. Also the partition count of
+        ``prepartition_delta``, so a caller's cached pipeline computes its
+        derived columns this wide however few files the commit writes."""
         return min(self.n_buckets, max(2, spark.sparkContext.defaultParallelism * 2))
 
-    def prepartition_delta(self, delta: DataFrame,
-                           write_tasks: int = 1) -> DataFrame:
+    def write_tasks_for(self, spark: SparkSession, input_bytes: int) -> int:
+        """Write tasks (= level-0 files) for a delta commit whose source
+        reads ``input_bytes``: one per ``spark.sql.files.maxPartitionBytes``
+        — the split size the session's scan of the same bytes uses —
+        capped at ``delta_partitions()``. A tail segment or a few-MB batch
+        writes one file; a multi-GB batch, a restore or a view bootstrap
+        over a large table keeps the full write parallelism."""
+        split = _byte_size(spark.conf.get("spark.sql.files.maxPartitionBytes",
+                                          _DEFAULT_SPLIT))
+        return max(1, min(self.delta_partitions(spark),
+                          -(-int(input_bytes) // max(1, split))))
+
+    @staticmethod
+    def _input_bytes(df: DataFrame) -> int:
+        """On-disk bytes of the files ``df`` reads (``inputFiles``; a file
+        the driver cannot stat counts as 0, a frame built in memory or
+        from a cache reads none) — what a delta commit sizes its write
+        tasks by when the caller does not say."""
+        from urllib.parse import unquote, urlparse
+
+        total = 0
+        for u in df.inputFiles():
+            try:
+                total += os.stat(unquote(urlparse(u).path)).st_size
+            except OSError:
+                pass
+        return total
+
+    def prepartition_delta(self, delta: DataFrame) -> DataFrame:
         """Bucket-align a delta for ``commit_delta_auto(prepartitioned=True)``:
         stamp THIS table's bucket id (its own ``key_cols``/``n_buckets`` —
         never a caller-side copy that a mid-lifetime ``rebucket()`` would
-        silently invalidate) and hash-partition by it into ``write_tasks``
-        partitions, one per file the commit writes. Callers compute
-        derived columns and ``persist()`` AFTER this so the cache stores
-        bucket-aligned partitions and the commit's own repartition can be
-        skipped."""
+        silently invalidate) and hash-partition by it, ``delta_partitions()``
+        wide. Callers compute derived columns and ``persist()`` AFTER this so
+        the cache stores bucket-aligned partitions and the commit's own
+        exchange is skipped: the commit coalesces them into its write tasks
+        without a shuffle."""
         # one projection, not drop + withColumn: each DataFrame op is an
         # eager Catalyst analysis pass — serial driver latency paid per
         # micro-batch on both sides of the N→4N ratio
         out = delta.select(
             *[c for c in delta.columns if c != BUCKET_COL],
             bucket_expr(self.key_cols, self.n_buckets).alias(BUCKET_COL))
-        return out.repartition(max(1, write_tasks), F.col(BUCKET_COL))
+        return out.repartition(
+            self.delta_partitions(out.sparkSession), F.col(BUCKET_COL))
 
     def commit_delta_auto(
         self,
@@ -1622,19 +1708,20 @@ class SnapshotTable:
         schema_json: str | None = None,
         seq_col: str = "seq_no",
         prepartitioned: bool = False,
-        write_tasks: int = 1,
+        input_bytes: int | None = None,
     ) -> dict | None:
         """Merge-on-read commit whose bucket stats come from the WRITTEN
-        parquet footers instead of a separate Spark aggregation job.
+        parquet files instead of a separate Spark aggregation job.
 
         The write is the only action: one level-0 file per write task
-        (``write_tasks``, hash-partitioned on the bucket column, rows
-        sorted by bucket and then key), so a small commit writes one file
-        however many buckets it touches. Then the driver reads each new
-        file's footer — row count, the bucket column's min/max (the range
-        the file covers, recorded in the manifest) and the ``seq_col``
-        column's min/max — to derive the per-bucket replay offsets and the
-        watermark. Footer reads are metadata-only local I/O. This is the
+        (``write_tasks_for(input_bytes)``; by default the bytes of the
+        files ``delta`` reads), rows sorted by bucket and then key, so a
+        small commit writes one file however many buckets it touches.
+        Then the driver reads each new file's footer — row count and the
+        ``seq_col`` column's min/max — and its bucket column (the exact
+        bucket set the file holds, recorded in the manifest) to derive
+        the per-bucket replay offsets and the watermark. Local I/O of a
+        footer and one sorted integer column per file. This is the
         lakehouse-idiomatic shape: column statistics already paid for by
         the parquet writer double as the commit's lineage, the way Iceberg
         manifests carry per-file column bounds. Files whose footers carry
@@ -1648,7 +1735,7 @@ class SnapshotTable:
             return None
         payload = self._write_delta_with_stats(
             delta, self._stage_tag(batch_id), seq_col, schema_json,
-            prepartitioned=prepartitioned, write_tasks=write_tasks)
+            prepartitioned=prepartitioned, input_bytes=input_bytes)
         prev_wm = self.watermark()
         seq_min, seq_max = payload["seq_min"], payload["seq_max"]
         published = self._publish(
@@ -1668,13 +1755,13 @@ class SnapshotTable:
                                 seq_col: str = "seq_no",
                                 schema_json: str | None = None,
                                 prepartitioned: bool = False,
-                                write_tasks: int = 1) -> dict:
+                                input_bytes: int | None = None) -> dict:
         """Write a delta's level-0 parquet under ``data/{dirname}/l0`` — one
         file per write task, rows sorted by bucket and then key, the bucket
         column stored — and derive the commit payload (files listed under
-        the lowest bucket each covers, their bucket ranges, per-bucket
+        the lowest bucket each holds, their exact bucket sets, per-bucket
         offsets, watermark inputs, zone-map stats) from the WRITTEN
-        footers — the shared body of ``commit_delta_auto`` (immediate
+        files — the shared body of ``commit_delta_auto`` (immediate
         publish) and ``stage_delta`` (write-audit-publish)."""
         # always record the commit's schema: key_bucket/lookup need the key
         # column TYPES to hash bit-exactly (xxhash64(int32) != xxhash64(
@@ -1684,92 +1771,107 @@ class SnapshotTable:
         if schema_json is None:
             schema_json = written_schema
         spark = delta.sparkSession
+        tasks = self.write_tasks_for(
+            spark, self._input_bytes(delta) if input_bytes is None else input_bytes)
         if prepartitioned:
             # caller guarantees BUCKET_COL is present and the DataFrame is
-            # already hash-partitioned by it into its write tasks —
+            # already hash-partitioned by it (delta_partitions()-sized) —
             # typically so a persisted upstream cache stores bucket-aligned
-            # partitions and THIS write runs exchange-free from the cache
+            # partitions and THIS write runs exchange-free from the cache:
+            # coalescing whole partitions keeps each bucket in one task
             if BUCKET_COL not in delta.columns:
                 raise ValueError("prepartitioned=True requires the bucket column")
+            delta = delta.coalesce(tasks)
         else:
             if BUCKET_COL not in delta.columns:
                 delta = delta.withColumn(
                     BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets))
-            delta = delta.repartition(max(1, write_tasks), F.col(BUCKET_COL))
+            delta = delta.repartition(tasks, F.col(BUCKET_COL))
         staging = self.root / "data" / dirname / "l0"
         (delta.sortWithinPartitions(BUCKET_COL, *self.key_cols)
          .write.mode("overwrite").parquet(str(staging)))
 
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
-        def footer(f: Path):
-            """rows, (min, max) of the bucket and of ``seq_col``"""
-            md = pq.ParquetFile(f).metadata
+        def written(f: Path):
+            """rows, the exact bucket set, (min, max) of ``seq_col``"""
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            bounds = []
-            for c in (BUCKET_COL, seq_col):
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        continue  # stats disabled or all-null row group
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                bounds.append((lo, hi))
-            return f, md.num_rows, bounds[0], bounds[1]
+            held: set[int] = set()
+            lo = hi = None
+            for rg in range(md.num_row_groups):
+                rgm = md.row_group(rg)
+                if rgm.num_rows == 0:
+                    continue
+                st = rgm.column(idx[BUCKET_COL]).statistics
+                if st is not None and st.has_min_max and st.min == st.max:
+                    held.add(int(st.min))  # sorted rows: one-bucket group
+                else:
+                    col = pf.read_row_group(rg, columns=[BUCKET_COL]).column(0)
+                    held.update(int(x) for x in pc.unique(col).to_pylist()
+                                if x is not None)
+                st = rgm.column(idx[seq_col]).statistics
+                if st is None or not st.has_min_max:
+                    continue  # stats disabled or all-null row group
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            return f, md.num_rows, sorted(held), (lo, hi)
 
         files = sorted(staging.glob("*.parquet"))
         with ThreadPoolExecutor(min(16, max(1, len(files)))) as pool:
-            stats = [s for s in pool.map(footer, files) if s[1] > 0]
+            stats = [s for s in pool.map(written, files) if s[1] > 0]
         for f in set(files) - {s[0] for s in stats}:
             f.unlink()  # an empty task's file: nothing to publish
         if prepartitioned:
             # the contract the caller asserted is cheap to CHECK from the
-            # staged footers — fail the commit instead of publishing a
+            # staged bucket sets — fail the commit instead of publishing a
             # corrupt manifest if the bucket ids came from a stale layout
             # (wrong n_buckets after rebucket), or if the frame was not
-            # partitioned into write tasks (one file per input partition)
-            bad = sorted({b for _, _, (lo, hi), _ in stats for b in (lo, hi)
-                          if b is not None and not 0 <= b < self.n_buckets})
-            cap = self.delta_partitions(spark)
-            if bad or len(stats) > cap:
+            # hash-partitioned on the bucket (a bucket split across the
+            # commit's files)
+            bad = sorted({b for _, _, held, _ in stats for b in held
+                          if not 0 <= b < self.n_buckets})
+            owner: dict[int, Path] = {}
+            split = sorted({b for f, _, held, _ in stats for b in held
+                            if owner.setdefault(b, f) != f})
+            if bad or split:
                 import shutil
                 shutil.rmtree(staging.parent, ignore_errors=True)
                 raise ValueError(
                     f"prepartitioned delta violates the bucket contract: "
                     f"out-of-range buckets {bad} (n_buckets={self.n_buckets}), "
-                    f"{len(stats)} files for at most {cap} write tasks — use "
+                    f"buckets split across files {split} — use "
                     f"SnapshotTable.prepartition_delta() to build the input")
         new_files: dict[str, list[str]] = {}
-        ranges: dict[str, list[int]] = {}
+        held_by: dict[str, list[int]] = {}
         offsets: dict[int, int] = {}
         n_keys, seq_min, seq_max = 0, None, None
-        for f, rows, (blo, bhi), (lo, hi) in stats:
+        for f, rows, held, (lo, hi) in stats:
             if lo is None:  # rare fallback: one small Spark pass over the gap
                 row = (spark.read.parquet(str(f))
                        .agg(F.min(seq_col), F.max(seq_col)).collect()[0])
                 lo, hi = row[0], row[1]
-            if blo is None:  # no bucket stats: the file may hold any bucket
-                blo, bhi = 0, self.n_buckets - 1
             rel = str(f.relative_to(self.root))
-            new_files.setdefault(str(blo), []).append(rel)
-            ranges[rel] = [int(blo), int(bhi)]
+            new_files.setdefault(str(held[0]), []).append(rel)
+            held_by[rel] = held
             n_keys += rows
             if hi is not None:
-                # one seq bound per file: every bucket it covers is applied
+                # one seq bound per file: every bucket it holds is applied
                 # up to the file's max (the batch advanced the global
                 # sequence frontier for all of them)
-                for b in range(int(blo), int(bhi) + 1):
+                for b in held:
                     offsets[b] = max(offsets.get(b, -1), int(hi))
                 seq_min = int(lo) if seq_min is None else min(seq_min, int(lo))
                 seq_max = int(hi) if seq_max is None else max(seq_max, int(hi))
 
         file_stats = self._merge_file_stats(
             self._collect_file_stats(new_files),
-            self._bloom_stats(delta, new_files, ranges))
-        for rel, r in ranges.items():
-            file_stats.setdefault(rel, {})[BUCKET_COL] = r
+            self._bloom_stats(delta, new_files, held_by))
+        for rel, held in held_by.items():
+            file_stats.setdefault(rel, {})[BUCKETS_STAT] = _runs(held)
         return {"new_files": new_files, "offsets": offsets, "n_keys": n_keys,
                 "seq_min": seq_min, "seq_max": seq_max,
                 "schema_json": schema_json, "file_stats": file_stats,
@@ -1949,8 +2051,9 @@ class SnapshotTable:
     def hot_buckets(self, threshold: int = COMPACT_EVERY) -> list[int]:
         """Buckets covered by at least ``threshold`` generations — the
         compaction work list. A delta generation may be one file spanning
-        many buckets (it counts once in each), or one file per bucket;
-        compaction writes one file per bucket. O(manifest), no data read."""
+        many buckets (it counts once in each bucket it holds), or one file
+        per bucket; compaction writes one file per bucket. O(manifest), no
+        data read."""
         m = self._load_state()
         if m is None:
             return []
@@ -1971,17 +2074,21 @@ class SnapshotTable:
                 lineage_extra: dict | None = None) -> bool:
         """Fold a bucket's delta generations into one file (LWW-reduced,
         tombstones retained). ``buckets=None`` compacts the whole table;
-        passing ``hot_buckets(threshold)`` makes compaction INCREMENTAL —
-        cost O(hot-bucket state), not O(table): only the listed buckets are
-        read (manifest-pruned) and rewritten; every other bucket's file list
-        carries over untouched (the delta manifest records only the replaced
-        buckets). At 100 TB with 16k buckets a single hot bucket compacts
-        alone in seconds rather than forcing a full-table rewrite.
-        The listed buckets grow to their closure over spanning delta files
-        (``_closure``): a delta file leaves the table only in the commit
-        that rewrites every bucket it covers, so none of its rows can
-        resurface or vanish. ``key_reduce(df) -> df`` defaults to the
-        engine's LWW kernel. No-op on an empty table or empty bucket list.
+        passing ``hot_buckets(threshold)`` makes compaction INCREMENTAL:
+        only the listed buckets are read (manifest-pruned) and merged;
+        every other bucket's file list carries over untouched (the delta
+        manifest records only the replaced buckets). A delta file leaves
+        the table only in the commit that rewrites every bucket it holds,
+        so none of its rows can resurface or vanish: the closure
+        (``_closure``) adds every bucket that a delta file holding a
+        listed bucket also holds, and those extra buckets are SPLIT, not
+        merged — the retired delta files' rows for them are LWW-reduced
+        into one per-bucket file that joins their older files, which are
+        not read. The cost is the listed buckets' state plus the rows of
+        the delta files that hold them, never the state of the buckets
+        those deltas merely touched. ``key_reduce(df) -> df`` defaults to
+        the engine's LWW kernel. No-op on an empty table or empty bucket
+        list.
 
         ``cluster_by`` sorts each bucket's rows by the given columns before
         the write (Delta OPTIMIZE ZORDER's 1-D analogue): the bucket file's
@@ -2005,13 +2112,19 @@ class SnapshotTable:
         if prev is None:
             return False
         live = _coverage(prev)
-        target = sorted(_closure(prev, live if buckets is None
-                                 else [b for b in buckets if b in live]))
+        want = set(live) if buckets is None else {b for b in buckets if b in live}
+        target = sorted(_closure(prev, want))
         if not target:
             return False
-        df = self.read(spark, buckets=target)
-        if df is None:
-            return False
+        # the closure's other buckets are SPLIT, not merged: only the rows
+        # the retired spanning files hold for them are reduced and written
+        # as one per-bucket file each, beside their untouched older files
+        split = [b for b in target if b not in want]
+        spanning = sorted({f for b in target for f in live[b]
+                           if len(_file_buckets(prev, str(b), f)) > 1})
+        df = self.read(spark, buckets=sorted(want))
+        if split:
+            df = df.unionByName(self._scan(spark, prev, spanning, split))
         if key_reduce is None:
             from .operators.upsert import last_writer_wins
 
@@ -2057,11 +2170,17 @@ class SnapshotTable:
         finally:
             if persisted is not None:
                 persisted.unpersist()
+        retired = set(spanning)
+        replace = {str(b): new_files.get(str(b), []) for b in want}
+        for b in split:
+            replace[str(b)] = [f for f in prev["files"].get(str(b), [])
+                               if f not in retired] + new_files.get(str(b), [])
         self._publish(batch_id=prev["batch_id"],
-                      files_replace={str(b): new_files.get(str(b), []) for b in target},
+                      files_replace={b: replace[b] for b in map(str, target)},
                       base_version=prev["version"],
                       watermark_seq=prev.get("watermark_seq", -1),
                       lineage={"compaction": True, "buckets": target,
+                               **({"split": split} if split else {}),
                                **({"cluster_by": cluster_by,
                                    "cluster_mode": cluster_mode}
                                   if cluster_by else {}),
@@ -2586,8 +2705,10 @@ class SnapshotTable:
         materializable); older versions disappear cleanly (``manifest_at``
         → None) rather than dangling. Tagged versions (``tag()``) extend
         the retention floor: a tag keeps its snapshot — and the contiguous
-        log suffix from it — alive until ``drop_tag``. Driver-side file
-        ops only — O(files), no Spark job.
+        log suffix from it — alive until ``drop_tag``. Files that no
+        version references (a crashed writer's) go too, even when the
+        window keeps every version. Driver-side file ops only — O(files),
+        no Spark job.
 
         SINGLE-WRITER ONLY: vacuum unlinks every data file not referenced
         by a kept manifest, which would include a CONCURRENT writer's
@@ -2614,14 +2735,18 @@ class SnapshotTable:
             min_pin = min(pinned)
             while cut > 0 and entries[cut][0] > min_pin:
                 cut -= 1
-        if cut <= 0:
+        if not entries:
             return {"deleted_files": 0, "dropped_manifests": 0}
+        # a window that keeps every version drops no manifest, but the
+        # orphan sweep below still runs: a dead writer's files are
+        # referenced by no version, kept or not
+        cut = max(cut, 0)
         kept, dropped = entries[cut:], entries[:cut]
         # promote the oldest kept version to a checkpoint BEFORE dropping
         # the older manifests it would otherwise need for materialization
         oldest_v, oldest_kind, oldest_path = kept[0]
         state = self._load_state(version=oldest_v)
-        if oldest_kind != "ckpt":
+        if dropped and oldest_kind != "ckpt":
             # the promoted checkpoint must keep the delta's own change-feed
             # fields (files_add/files_replace/commit + lineage/metrics) —
             # a ckpt built from materialized state alone would make
@@ -2739,16 +2864,16 @@ class SnapshotTable:
             return {rel: st for rel, st in pool.map(one, rels) if st}
 
     def _bloom_stats(self, df: DataFrame, new_files: dict[str, list[str]],
-                     ranges: dict[str, list[int]] | None = None
+                     held_by: dict[str, list[int]] | None = None
                      ) -> dict[str, dict]:
         """Per-file Bloom filters for ``bloom_cols``, computed as ONE
         map-side-combining Spark aggregate over the rows being written
         (O(batch), 32 ``bit_or`` words per column per bucket, zero Python
         in the plan). A file's filter is the OR of the filters of the
-        buckets it covers: its bucket for a per-bucket file, its recorded
-        ``ranges`` entry for a delta file spanning many (whose filter
-        fills faster — sized for one bucket's values, a spanning file
-        skips less, never wrongly). Equality reads skip files whose
+        buckets it holds: its bucket for a per-bucket file, its
+        ``held_by`` bucket set for a delta file spanning many (whose
+        filter fills faster — sized for one bucket's values, a spanning
+        file skips less, never wrongly). Equality reads skip files whose
         filter proves the value absent — the pruning zone maps cannot do
         for high-cardinality values (commit shas, paths) whose min/max
         bounds are useless. Opt-in via ``bloom_cols``; a bucket that
@@ -2769,17 +2894,16 @@ class SnapshotTable:
                      c: [(r[f"__bf_{c}__{w}"] or 0) & 0xFFFFFFFFFFFFFFFF
                          for w in range(BLOOM_WORDS)] for c in cols}
                  for r in df.groupBy(BUCKET_COL).agg(*aggs).collect()}
-        ranges = ranges or {}
+        held_by = held_by or {}
         out: dict[str, dict] = {}
         for b, fs in new_files.items():
             for f in fs:
-                if f not in ranges and len(fs) != 1:
+                if f not in held_by and len(fs) != 1:
                     continue
-                lo, hi = ranges.get(f, (int(b), int(b)))
                 per_col = {}
                 for c in cols:
                     acc = [0] * BLOOM_WORDS
-                    for x in range(lo, hi + 1):
+                    for x in held_by.get(f, [int(b)]):
                         for w, v in enumerate(words.get(x, {}).get(c, ())):
                             acc[w] |= v
                     raw = b"".join(w.to_bytes(8, "little") for w in acc)

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from omop_meds_spark.table import BUCKET_COL, SnapshotTable, bucket_expr
+from omop_meds_spark.table import BUCKET_COL, SnapshotTable, _file_buckets, bucket_expr
 
 
 def _delta(spark, rows):
@@ -137,12 +137,12 @@ def test_point_lookup_scans_one_bucket(spark, tmpdir_path):
     assert [(r["repo"], r["path"], r["seq_no"]) for r in got.collect()] == [
         ("r7", "p7", 7)
     ]
-    # scan is pruned to the files that cover the key's bucket: the one
-    # delta file spans them all; after compaction, the bucket's own file
+    # scan is pruned to the files that hold the key's bucket: the one
+    # delta file holds it (and others); after compaction, the bucket's
+    # own file
     m = t.latest()
     (l0,) = [f for fs in m["files"].values() for f in fs]
-    lo, hi = m["file_stats"][l0][BUCKET_COL]
-    assert lo <= b <= hi
+    assert b in _file_buckets(m, "0", l0)
     assert {f.removeprefix("file://") for f in got.inputFiles()} == {str(t.root / l0)}
     t.compact(spark)
     got = t.lookup(spark, key)

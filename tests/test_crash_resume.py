@@ -105,7 +105,7 @@ def test_killed_writer_resumes_to_the_oracle(spark, tmpdir_path, point):
             # the dead compaction's per-bucket files: no manifest names them
             assert rep["orphan_files"] and all(
                 f.startswith("data/compact") for f in rep["orphan_files"])
-        t.vacuum(keep_versions=1)
+        t.vacuum()
         assert not any((t.root / f).exists() for f in rep["orphan_files"])
         assert t.fsck()["orphan_files"] == [] and t.fsck()["missing_files"] == []
     assert verify.state_fingerprint(r.final_state(), FP_COLS) == \

@@ -11,6 +11,7 @@ are counted per call with ``setJobGroup`` + ``statusTracker``."""
 from __future__ import annotations
 
 import json
+import os
 import random
 import uuid
 
@@ -175,7 +176,8 @@ def test_small_batch_file_budget(spark, tmpdir_path):
                 for p in (t.root / "data").rglob("*.parquet")}
 
     before = data_files()
-    assert r.write_tasks(segment) == 1
+    wal_bytes = sum(os.path.getsize(f) for f in segment.files)
+    assert r.table.write_tasks_for(spark, wal_bytes) == 1
     r.apply_batch(segment)
     assert len(data_files() - before) == 2
     for t in (r.table, r.meds_table):

@@ -118,7 +118,7 @@ def test_change_feed_zero_exchange_scan(spark, tmpdir_path):
 def test_point_lookup_pushes_key_predicate(spark, tmpdir_path):
     """The key equality must reach the parquet scan (PushedFilters), on a
     scan already pruned to the key's single bucket."""
-    from omop_meds_spark.table import SnapshotTable
+    from omop_meds_spark.table import SnapshotTable, _file_buckets
 
     t = SnapshotTable(tmpdir_path, ["repo", "path"], n_buckets=8)
     t.commit_delta_auto(
@@ -130,11 +130,10 @@ def test_point_lookup_pushes_key_predicate(spark, tmpdir_path):
     assert "PushedFilters" in plan and "repo" in plan
     m = t.latest()
     b = t.key_bucket(spark, {"repo": "r3", "path": "p3"})
-    # one delta file covers the bucket (its rows filtered to it) →
+    # one delta file holds the bucket (its rows filtered to it) →
     # single-generation fast path: no LWW exchange either
     (f,) = [f for fs in m["files"].values() for f in fs]
-    lo, hi = m["file_stats"][f]["__bucket"]
-    assert lo <= b <= hi and _exchanges(plan) == 0
+    assert b in _file_buckets(m, "0", f) and _exchanges(plan) == 0
 
 
 def test_minhash_lsh_single_signature_subtree(spark):

@@ -7,7 +7,13 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from omop_meds_spark.table import BUCKET_COL, SnapshotTable, bucket_expr
+from omop_meds_spark.table import (
+    BUCKET_COL,
+    BUCKETS_STAT,
+    SnapshotTable,
+    _file_buckets,
+    bucket_expr,
+)
 
 
 def _df(spark, rows):
@@ -186,8 +192,10 @@ def test_mixed_file_levels_match_lww_oracle(spark, tmpdir_path):
     assert all(_mix_bucket(k) < MIX_N for k in keys)
     assert sorted(int(b) for b in t.latest()["files"]) == sorted(
         {_mix_bucket(k) for k in keys})
-    # a delta spanning buckets 2..5, a per-bucket delta, a delta over 6..7
+    # a delta over buckets 2, 3 and 5 (not 4), a per-bucket delta, a delta
+    # over 6..7
     mid = _mix_keys({2, 3, 5}, 12)
+    assert {_mix_bucket(k) for k in mid} == {2, 3, 5}
     commit([(*k, 200 + i, "U", f"c{i}") for i, k in enumerate(mid)], 2)
     edge = _mix_keys({0, 6}, 4, start=1000)
     commit([(*k, 300 + i, "U", f"d{i}") for i, k in enumerate(edge)], 3,
@@ -200,9 +208,17 @@ def test_mixed_file_levels_match_lww_oracle(spark, tmpdir_path):
     m = t.latest()
     listed = [f for fs in m["files"].values() for f in fs]
     assert len(listed) == len(set(listed))  # each live file exactly once
-    ranges = [m["file_stats"].get(f, {}).get(BUCKET_COL) for f in listed]
-    assert sorted(tuple(r) for r in ranges if r) == [(2, 5), (6, 7)]
-    assert any(r["last_bucket"] > r["bucket"] for r in t.files(spark).collect())
+    spanning = {f: _file_buckets(m, b, f) for b, fs in m["files"].items()
+                for f in fs if BUCKETS_STAT in m["file_stats"].get(f, {})}
+    assert sorted(spanning.values()) == [[2, 3, 5], [6, 7]]
+    assert sorted(r["buckets"] for r in t.files(spark).collect()
+                  if len(r["buckets"]) > 1) == [[2, 3, 5], [6, 7]]
+    # the exact bucket set prunes: bucket 4 lies inside the 2..5 delta's
+    # min/max but is not among its buckets, so its read never opens it
+    (mid_file,) = [f for f, bs in spanning.items() if bs == [2, 3, 5]]
+    opened = {f.removeprefix("file://")
+              for f in t.read(spark, buckets=[4]).inputFiles()}
+    assert opened and str(t.root / mid_file) not in opened
 
     # read(buckets=S): exactly the rows of S; read_live(buckets=S) = oracle
     for s in ([3], [4], [0, 6], [5, 6], [1, 7]):
@@ -224,18 +240,26 @@ def test_mixed_file_levels_match_lww_oracle(spark, tmpdir_path):
         assert _live(t.read_live(spark, eq=("val", val))) == o.live(
             lambda k, v: v[2] == val), val
     # changed_buckets covers every changed row's bucket, within the spans
-    assert t.changed_buckets(v_l1, v_l1 + 1) == [2, 3, 4, 5]
+    assert t.changed_buckets(v_l1, v_l1 + 1) == [2, 3, 5]
     ch = t.changed_buckets(v_l1, v_mixed)
     rows = t.read_changes(spark, v_l1, v_mixed).collect()
     assert {_mix_bucket((r["repo"], r["path"])) for r in rows} <= set(ch)
     assert set(ch) <= {0, 2, 3, 4, 5, 6, 7}
 
-    # compaction: the closure of bucket 3 is the 2..5 span; 6..7 stays
+    # compaction: the closure of bucket 3 is {2, 3, 5}; bucket 3 is merged
+    # into one file, 2 and 5 keep their older file beside a split file of
+    # the retired delta's rows; 4 and 6..7 stay
+    before = t.latest()["files"]
     assert t.compact(spark, buckets=[3])
     m = t.latest()
-    assert [tuple(st[BUCKET_COL]) for st in m["file_stats"].values()
-            if BUCKET_COL in st] == [(6, 7)]
-    assert t.hot_buckets(2) == sorted({6, 7} | {_mix_bucket(k) for k in edge})
+    assert [st[BUCKETS_STAT] for st in m["file_stats"].values()
+            if BUCKETS_STAT in st] == [[[6, 7]]]
+    assert m["files"]["4"] == before["4"]  # outside the closure: untouched
+    assert len(m["files"]["3"]) == 1
+    for b in ("2", "5"):
+        assert before[b][0] in m["files"][b] and len(m["files"][b]) == 2
+    assert t.hot_buckets(2) == sorted(
+        {2, 5, 6, 7} | {_mix_bucket(k) for k in edge})
     snaps[t.version] = dict(o.state)
     for v, state in snaps.items():  # time travel before and after
         want = {(*k, s[0], s[2]) for k, s in state.items() if s[1] != "D"}
@@ -292,5 +316,5 @@ def test_commit_merged_over_a_spanning_delta_file(spark, tmpdir_path):
     want = {(*k, i, f"a{i}") for i, k in enumerate(keys) if _mix_bucket(k) != b}
     assert _live(t.read_live(spark)) == want | {(*keys[0], 50, "new")}
     m = t.latest()
-    assert not any(BUCKET_COL in st for st in m["file_stats"].values())
+    assert not any(BUCKETS_STAT in st for st in m["file_stats"].values())
     assert len(m["files"][str(b)]) == 1

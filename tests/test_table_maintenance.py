@@ -712,13 +712,47 @@ def test_prepartitioned_commit_matches_default_path(spark, tmpdir_path):
         4, F.col(BUCKET_COL))
     with pytest.raises(ValueError, match="out-of-range"):
         tb.commit_delta_auto(stale, 1, prepartitioned=True)
-    # guard: a frame not partitioned into write tasks writes a file per
-    # input partition, more than any delta commit may
+    # guard: a frame not hash-partitioned on the bucket splits a bucket
+    # across the commit's files once the commit writes more than one
+    # (input_bytes sized for every write task)
     scattered = plain.withColumn(BUCKET_COL, bucket_expr(KEYS, 4)).repartition(16)
-    with pytest.raises(ValueError, match="write tasks"):
-        tb.commit_delta_auto(scattered, 1, prepartitioned=True)
+    with pytest.raises(ValueError, match="split across files"):
+        tb.commit_delta_auto(scattered, 1, prepartitioned=True,
+                             input_bytes=1 << 40)
     assert tb.version == 0  # nothing published, staging cleaned
     assert _live_rows(spark, tb) == _live_rows(spark, ta)
+
+
+def test_write_tasks_follow_input_bytes(spark, tmpdir_path):
+    """A delta commit writes one level-0 file per
+    ``spark.sql.files.maxPartitionBytes`` of input, capped at
+    ``delta_partitions()``; a caller that states no size (a restore) is
+    sized by the files its frame reads."""
+    key = "spark.sql.files.maxPartitionBytes"
+    t = SnapshotTable(Path(tmpdir_path) / "t", KEYS, n_buckets=8)
+    cap = t.delta_partitions(spark)
+    split = 16 << 20  # get_spark's setting
+    assert spark.conf.get(key) == "16m"
+    assert [t.write_tasks_for(spark, n) for n in (0, 1, split)] == [1, 1, 1]
+    assert t.write_tasks_for(spark, split + 1) == min(2, cap)
+    assert t.write_tasks_for(spark, 1 << 40) == cap
+
+    rows = [(f"r{i % 7}", f"p{i}", i + 1, "U") for i in range(300)]
+    schema = "repo string, path string, seq_no long, op string"
+    t.commit_delta_auto(spark.createDataFrame(rows, schema), 0)
+    t.commit_delta_auto(spark.createDataFrame(
+        [(r, p, s + 1000, "D") for r, p, s, _ in rows[::3]], schema), 1)
+    before = {f for fs in t.latest()["files"].values() for f in fs}
+    assert len(before) == 2  # in-memory frames read no files: one task
+    spark.conf.set(key, "1k")
+    try:
+        assert t.restore(spark, version=0)["restored"]
+    finally:
+        spark.conf.set(key, "16m")
+    added = {f for fs in t.latest()["files"].values() for f in fs} - before
+    assert 1 < len(added) <= cap
+    live = {(r["repo"], r["path"]) for r in t.read_live(spark).collect()}
+    assert live == {(r, p) for r, p, _, _ in rows}
 
 
 def test_partitions_metadata_table(spark, tmpdir_path):
