@@ -18,10 +18,15 @@ Per refresh of source range ``(v0, v1]`` the cost is O(changed data):
   rows alone its v0 state (decrement). Diffing full before/after states
   (not the range's winner rows) keeps the fold correct under ANY
   sequencing: a key's final value is the LWW across all generations;
-* the signed contributions aggregate to one tiny delta frame, which
-  merges (full outer, null-safe on dims) into the view's current rows for
-  the affected dim groups only — groups whose count reaches zero become
-  delete tombstones;
+* the signed contributions aggregate to one row per changed dim group —
+  the group's signed delta — and that frame is committed AS IS as one
+  generation of the view table (``op='U'``, ``seq_no=v1``): one Spark
+  query, no read of the view. The view table merges by SUM
+  (``SnapshotTable(merge="sum")``), so its reads add a group's delta
+  generations up, and its compaction folds them into one row per group
+  and drops groups whose counts and sums all net to zero. The view's own
+  change feed therefore carries the signed per-group deltas, not whole
+  group rows;
 * the view table's hot buckets compact at the ingest cadence
   (``COMPACT_EVERY`` generations), so a view read stays bounded however
   many refreshes ran.
@@ -36,14 +41,14 @@ Measure semantics: ``n_rows`` is COUNT(*); each ``sum_cols`` entry ``c``
 maintains ``sum_{c}`` in DECIMAL(28,4) (exact, order-free — incremental
 folding must not depend on float addition order) plus ``cnt_{c}``
 (non-null count) so ``read()`` can return SQL-exact NULL for all-null
-groups.
+groups. A view table written before refreshes appended deltas (whole
+group rows, last-writer-wins) raises on open: rebuild it.
 """
 
 from __future__ import annotations
 
 import functools
 import json
-import operator
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,8 +95,18 @@ class IncrementalAggView:
         self.source = source
         self.dims = list(dims)
         self.sum_cols = list(sum_cols or [])
-        self.table = SnapshotTable(root, key_cols=self.dims,
-                                   n_buckets=n_buckets)
+        try:
+            self.table = SnapshotTable(root, key_cols=self.dims,
+                                       n_buckets=n_buckets, merge="sum")
+        except ValueError as e:
+            if "merge=" not in str(e):
+                raise
+            # a view written before refreshes appended per-group deltas
+            # holds whole group rows: summing them would count them again
+            raise ValueError(
+                f"incremental view {root} was written as last-writer-wins "
+                f"group rows; rebuild the view (remove {root} and refresh)"
+            ) from e
 
     # ------------------------------------------------------------- cursor
     @property
@@ -196,53 +211,12 @@ class IncrementalAggView:
                 self._empty_commit_frame(spark), batch_id, lineage=lineage,
                 schema_json=(self.table.latest() or {}).get("schema"))
             return True
-        # delta drives the bucket-id collect AND the merge write — persist
-        # so its O(changed-bucket state) upstream computes once
-        delta = self._agg(signed).persist()
-        try:
-            # merge into the view's current rows for the affected dims only:
-            # manifest-pruned read of the delta's buckets, null-safe semi
-            # join down to the changed dim groups, then a full outer with
-            # the delta (renamed columns — no alias ambiguity, nulls are
-            # real groups)
-            vbs = sorted(
-                r["b"] for r in delta.select(
-                    bucket_expr(self.dims, self.table.n_buckets).alias("b"))
-                .distinct().collect())
-            cur = self.table.read_live(spark, buckets=vbs)
-            mtypes = self._measure_types()
-            if cur is not None:
-                cur_r = cur.select(
-                    *[F.col(k).alias(f"_c_{k}") for k in self.dims],
-                    *[F.col(n).alias(f"_c_{n}") for n, _ in mtypes])
-                dimkeys = delta.select(
-                    *[F.col(k).alias(f"_k_{k}") for k in self.dims]).distinct()
-                semi = functools.reduce(operator.and_, [
-                    F.col(f"_c_{k}").eqNullSafe(F.col(f"_k_{k}"))
-                    for k in self.dims])
-                cur_r = cur_r.join(dimkeys, semi, "left_semi")
-                outer = functools.reduce(operator.and_, [
-                    F.col(k).eqNullSafe(F.col(f"_c_{k}")) for k in self.dims])
-                j = delta.join(cur_r, outer, "full_outer")
-                out_dims = [F.coalesce(F.col(k), F.col(f"_c_{k}")).alias(k)
-                            for k in self.dims]
-                measures = [
-                    (F.coalesce(F.col(n), F.lit(0).cast(t))
-                     + F.coalesce(F.col(f"_c_{n}"), F.lit(0).cast(t)))
-                    .cast(t).alias(n)
-                    for n, t in mtypes]
-            else:
-                j = delta
-                out_dims = [F.col(k) for k in self.dims]
-                measures = [F.coalesce(F.col(n), F.lit(0).cast(t))
-                            .cast(t).alias(n) for n, t in mtypes]
-            merged = j.select(*out_dims, *measures).withColumn(
-                "op",
-                F.when(F.col("n_rows") == 0, F.lit("D")).otherwise(F.lit("U"))
-            ).withColumn("seq_no", F.lit(v1).cast("long"))
-            self.table.commit_delta_auto(merged, batch_id, lineage=lineage)
-        finally:
-            delta.unpersist()
+        # the signed per-group delta is one generation of the sum table:
+        # reads and compaction add it to the groups' earlier generations
+        self.table.commit_delta_auto(
+            self._agg(signed).select(
+                "*", F.lit("U").alias("op"), F.lit(v1).cast("long").alias("seq_no")),
+            batch_id, lineage=lineage)
         self.table.compact_hot(spark)
         return True
 
@@ -264,10 +238,12 @@ class IncrementalAggView:
     def read(self, spark: SparkSession) -> DataFrame | None:
         """The view as a user-facing frame: dims, ``n_rows``, and for each
         measure ``sum_{c}`` (NULL when the group holds no non-null values,
-        matching SQL SUM)."""
+        matching SQL SUM). Reading sums each group's delta generations; a
+        group whose rows all went away reads as absent."""
         df = self.table.read_live(spark)
         if df is None:
             return None
+        df = df.filter(F.col("n_rows") != 0)
         cols = [F.col(d) for d in self.dims] + [F.col("n_rows")]
         for c in self.sum_cols:
             cols.append(F.when(F.col(f"cnt_{c}") > 0, F.col(f"sum_{c}"))

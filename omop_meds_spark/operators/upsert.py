@@ -6,10 +6,14 @@ of a CDC upsert: one surviving row per key, chosen by a total order. Spark's
 ``groupBy().agg(first())`` is NOT order-deterministic, so the kernel uses
 ``max_by`` over a (seq_no, event_id) struct ordering:
 
-* ``max_by`` is a true aggregate: partial (map-side) combine, no sort, no
-  window buffering — at 100 TB this is one shuffle of pre-combined partials,
-  strictly cheaper than ``row_number() OVER`` (which shuffles every row and
-  sorts each partition).
+* ``max_by`` is a true aggregate with a partial (map-side) combine: each
+  map task emits at most one row per key, so at 100 TB the one key
+  exchange carries pre-combined partials, not every event — cheaper than
+  ``row_number() OVER`` (which shuffles every row). It is NOT sort-free:
+  the struct-valued ``max_by`` buffer is not fixed-width, so Spark cannot
+  hash-aggregate it and plans ``SortAggregate`` — every raw row, payload
+  included, is sorted by key before the partial aggregate, and the
+  partials again after the exchange.
 * Skew: for an *algebraic* aggregate like max_by, map-side combine already
   neutralizes hot keys — every map task emits at most ONE row per key, so
   the reducer of the hottest (repo, path) receives ≤ #map-partitions rows

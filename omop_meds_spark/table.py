@@ -95,12 +95,27 @@ Scale notes (100 TB design):
   untouched older files (``compact``). Its cost is the hot buckets' state
   plus the rows of the retired delta files, not the state of every bucket
   those deltas touched.
+
+Merge rule (``merge``, table state recorded in ``_table.json`` like
+``key_cols``): how the generations of a key reduce to one row, in reads,
+lookups, compaction and rebucket (``SnapshotTable._reduce``). ``"lww"``
+(the default) keeps the row with the greatest (``seq_no``, tiebreak) —
+tombstones included. ``"sum"`` adds every column other than the key,
+``op`` and ``seq_no`` (each sum cast back to its column's type; a key
+whose sums are all zero drops out), so a commit can append a signed
+per-key delta as a generation of its own — the aggregation merge engine
+of LSM lakehouse tables (Apache Paimon's ``merge-engine =
+aggregation``). The DML whose meaning is last-writer-wins (``restore``,
+``delete_where``, ``purge_keys``, ``purge_where``, ``commit_merged``)
+raises on a sum table.
 """
 
 from __future__ import annotations
 
 import bisect
+import functools
 import json
+import operator
 import os
 import re
 import tempfile
@@ -128,6 +143,9 @@ COMPACT_EVERY = 8
 #: ``file_stats`` key under which a delta (L0) file records the exact set
 #: of buckets it holds rows of, as sorted inclusive runs (``_runs``)
 BUCKETS_STAT = "__buckets__"
+
+#: how the generations of a key reduce to one row (``SnapshotTable._reduce``)
+MERGE_RULES = ("lww", "sum")
 
 #: ``spark.sql.files.maxPartitionBytes``' own default, for a session that
 #: leaves it unset
@@ -754,7 +772,8 @@ class SnapshotTable:
                  n_buckets: int | None = None, checkpoint_every: int = 16,
                  stats_cols: list[str] | None = None,
                  bloom_cols: list[str] | None = None,
-                 concurrent_writers: bool = False):
+                 concurrent_writers: bool = False,
+                 merge: str | None = None):
         # Opt-in OPTIMISTIC CONCURRENCY (Iceberg's model): pure-append
         # delta commits skip the writer lease and race on the manifest
         # version slot (an atomic no-clobber create); a loser rebases onto
@@ -776,6 +795,8 @@ class SnapshotTable:
         self.root = Path(root)
         self.key_cols = list(key_cols)
         self.checkpoint_every = max(1, checkpoint_every)
+        if merge not in (None, *MERGE_RULES):
+            raise ValueError(f"merge must be one of {MERGE_RULES}, not {merge!r}")
         (self.root / "_log").mkdir(parents=True, exist_ok=True)
         (self.root / "data").mkdir(parents=True, exist_ok=True)
         # The bucket layout is TABLE STATE, not a session parameter: a
@@ -801,6 +822,14 @@ class SnapshotTable:
                 raise ValueError(
                     f"snapshot table {self.root} was created with key_cols="
                     f"{stored.get('key_cols')}, not {self.key_cols}")
+            # like the layout, the merge rule decides what the stored
+            # generations mean: a table written before the rule was
+            # recorded merges last-writer-wins
+            self.merge = stored.get("merge", "lww")
+            if merge is not None and merge != self.merge:
+                raise ValueError(
+                    f"snapshot table {self.root} was created with merge="
+                    f"{self.merge!r}, not {merge!r}")
             stored_buckets = int(stored["n_buckets"])
             # The COMMIT LOG is the layout's source of truth — rebucket()
             # publishes the new layout INSIDE its manifest, so the layout
@@ -835,6 +864,7 @@ class SnapshotTable:
             self.bloom_cols = (list(bloom_cols) if bloom_cols is not None
                                else list(stored.get("bloom_cols", [])))
         else:
+            self.merge = merge or "lww"
             self.n_buckets = int(n_buckets) if n_buckets is not None else 32
             self.stats_cols = list(stats_cols or [])
             self.bloom_cols = list(bloom_cols or [])
@@ -857,7 +887,7 @@ class SnapshotTable:
         with os.fdopen(fd, "w") as f:
             json.dump({
                 "format": 1, "key_cols": self.key_cols,
-                "n_buckets": self.n_buckets,
+                "n_buckets": self.n_buckets, "merge": self.merge,
                 "stats_cols": self.stats_cols,
                 "bloom_cols": getattr(self, "bloom_cols", [])}, f)
         os.replace(tmp_name, meta_path)  # atomic publish, same as manifests
@@ -1368,19 +1398,20 @@ class SnapshotTable:
                   eq: tuple[str, object] | None = None) -> DataFrame | None:
         """Current state minus delete tombstones (the user-facing table).
 
-        Merge-on-read: LWW-reduces across the delta generations that cover
-        a bucket. A delta generation may be one file spanning many
-        buckets; compaction writes one file per bucket — either way a
+        Merge-on-read: reduces the delta generations that cover a bucket
+        under the table's merge rule (``_reduce``). A delta generation may
+        be one file spanning many buckets; compaction writes one file per
+        bucket — either way a
         generation holds at most one row per key (delta files are
         per-batch winners, compaction files are fully reduced). FAST
         PATH: a bucket covered by exactly ONE generation needs no reduce
         at all — when every requested bucket is single-generation (the
         steady state right after compaction, or after a first load), the
         plan is scan + tombstone filter with ZERO exchanges. Otherwise the
-        LWW reduce shuffles once on the key; at 100 TB the scheduled
+        reduce shuffles once on the key; at 100 TB the scheduled
         compaction keeps most reads on the fast path.
 
-        ``between=(col, lo, hi)`` filters on the LWW WINNER's value.
+        ``between=(col, lo, hi)`` filters on the REDUCED row's value.
         Zone-map file skipping applies only to SINGLE-generation buckets:
         in a multi-generation bucket an out-of-range winner file could be
         pruned and a stale in-range loser would wrongly survive, so those
@@ -1398,12 +1429,6 @@ class SnapshotTable:
                 raise ValueError("pass eq= or between=, not both")
             between = (eq[0], eq[1], eq[1])  # same winner-filter semantics;
             # single-generation buckets additionally Bloom-prune via read(eq=)
-        from .operators.upsert import last_writer_wins
-
-        def lww(d: DataFrame) -> DataFrame:
-            tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-            return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
-
         depth = {b: len({_generation(f) for f in fs})
                  for b, fs in _coverage(m, buckets).items()}
         if between is None:
@@ -1412,7 +1437,7 @@ class SnapshotTable:
                 return None
             df = df.drop(BUCKET_COL)
             if any(d > 1 for d in depth.values()):
-                df = lww(df)
+                df = self._reduce(df)
             return df.filter(F.col(op_col) != "D")
         single = [b for b, d in depth.items() if d == 1]
         multi = [b for b, d in depth.items() if d > 1]
@@ -1427,13 +1452,44 @@ class SnapshotTable:
             d2 = self.read(spark, multi, version=version)
             if d2 is not None:
                 parts.append(self._between_filter(
-                    lww(d2.drop(BUCKET_COL)), *between))
+                    self._reduce(d2.drop(BUCKET_COL)), *between))
         if not parts:
             return None
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         return out.filter(F.col(op_col) != "D")
+
+    def _reduce(self, df: DataFrame) -> DataFrame:
+        """One row per key of ``df`` (generations of the table's rows,
+        without the bucket column) under the table's merge rule: the
+        greatest (``seq_no``, tiebreak) row, tombstones kept; or, on a sum
+        table, every other column summed and cast back to its type, with
+        ``op`` and ``seq_no`` their maxima, dropping a key whose sums are
+        all zero (null counts as zero)."""
+        if self.merge == "lww":
+            from .operators.upsert import last_writer_wins
+
+            tiebreak = "event_id" if "event_id" in df.columns else "seq_no"
+            return last_writer_wins(df, self.key_cols, tiebreak_col=tiebreak)
+        types = dict(df.dtypes)
+        measures = [c for c in df.columns
+                    if c not in {*self.key_cols, "op", "seq_no"}]
+        out = df.groupBy(*self.key_cols).agg(
+            *[F.sum(c).cast(types[c]).alias(c) for c in measures],
+            *[F.max(c).alias(c) for c in ("op", "seq_no") if c in types])
+        if measures:
+            out = out.filter(functools.reduce(operator.or_, [
+                F.coalesce(F.col(c), F.lit(0)) != 0 for c in measures]))
+        return out.select(*df.columns)
+
+    def _require_lww(self, op: str) -> None:
+        """DML that replaces or deletes a key's state has no meaning on a
+        sum table, where every generation adds to the key."""
+        if self.merge != "lww":
+            raise ValueError(
+                f"{op}: table {self.root} merges by {self.merge!r}; {op} "
+                f"needs a last-writer-wins table")
 
     def read_changes(self, spark: SparkSession, since_version: int,
                      to_version: int | None = None,
@@ -1593,14 +1649,18 @@ class SnapshotTable:
                version: int | None = None) -> DataFrame | None:
         """Manifest-pruned point lookup: scans only the key's bucket
         (1/n_buckets of the files) with the equality predicate pushed to
-        parquet — the O(1)-ish primary-key read path."""
+        parquet — the O(1)-ish primary-key read path. The key's rows of
+        every generation are few, so they are reduced in ONE partition:
+        a single partition already meets the aggregate's distribution,
+        and the plan has no exchange (one Spark job)."""
         b = self.key_bucket(spark, key)
-        df = self.read_live(spark, buckets=[b], version=version)
+        df = self.read(spark, buckets=[b], version=version)
         if df is None:
             return None
         for c in self.key_cols:
             df = df.filter(F.col(c) == F.lit(key[c]))
-        return df
+        return (self._reduce(df.drop(BUCKET_COL).coalesce(1))
+                .filter(F.col("op") != "D"))
 
     # -------------------------------------------------------------- write
     def commit_delta(
@@ -1616,7 +1676,7 @@ class SnapshotTable:
     ) -> bool:
         """Merge-on-read commit with caller-supplied offsets: append the
         batch's per-key winners (with the bucket column) as one new file
-        per touched bucket — NO state read, NO rewrite. Readers LWW-reduce
+        per touched bucket — NO state read, NO rewrite. Readers reduce
         across a bucket's generations (``read_live``); ``compact`` bounds
         their count. ``commit_delta_auto`` is the hot-path commit, which
         writes one file per write task instead; ``commit_merged`` remains
@@ -2072,23 +2132,24 @@ class SnapshotTable:
                 cluster_by: list[str] | None = None,
                 cluster_mode: str = "lex",
                 lineage_extra: dict | None = None) -> bool:
-        """Fold a bucket's delta generations into one file (LWW-reduced,
-        tombstones retained). ``buckets=None`` compacts the whole table;
-        passing ``hot_buckets(threshold)`` makes compaction INCREMENTAL:
-        only the listed buckets are read (manifest-pruned) and merged;
+        """Fold a bucket's delta generations into one file (reduced under
+        the table's merge rule, tombstones retained). ``buckets=None``
+        compacts the whole table; passing ``hot_buckets(threshold)`` makes
+        compaction INCREMENTAL: only the listed buckets are read
+        (manifest-pruned) and merged;
         every other bucket's file list carries over untouched (the delta
         manifest records only the replaced buckets). A delta file leaves
         the table only in the commit that rewrites every bucket it holds,
         so none of its rows can resurface or vanish: the closure
         (``_closure``) adds every bucket that a delta file holding a
         listed bucket also holds, and those extra buckets are SPLIT, not
-        merged — the retired delta files' rows for them are LWW-reduced
+        merged — the retired delta files' rows for them are reduced
         into one per-bucket file that joins their older files, which are
         not read. The cost is the listed buckets' state plus the rows of
         the delta files that hold them, never the state of the buckets
         those deltas merely touched. ``key_reduce(df) -> df`` defaults to
-        the engine's LWW kernel. No-op on an empty table or empty bucket
-        list.
+        the table's merge rule (``_reduce``). No-op on an empty table or
+        empty bucket list.
 
         ``cluster_by`` sorts each bucket's rows by the given columns before
         the write (Delta OPTIMIZE ZORDER's 1-D analogue): the bucket file's
@@ -2125,13 +2186,7 @@ class SnapshotTable:
         df = self.read(spark, buckets=sorted(want))
         if split:
             df = df.unionByName(self._scan(spark, prev, spanning, split))
-        if key_reduce is None:
-            from .operators.upsert import last_writer_wins
-
-            def key_reduce(d):
-                tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
-        reduced = key_reduce(df.drop(BUCKET_COL)).withColumn(
+        reduced = (key_reduce or self._reduce)(df.drop(BUCKET_COL)).withColumn(
             BUCKET_COL, bucket_expr(self.key_cols, self.n_buckets)
         )
         tag = f"compact{prev['version'] + 1:06d}"
@@ -2190,17 +2245,17 @@ class SnapshotTable:
                       written_schema=_file_schema(reduced))
         return True
 
-    def rebucket(self, spark: SparkSession, new_n_buckets: int,
-                 key_reduce=None) -> bool:
+    def rebucket(self, spark: SparkSession, new_n_buckets: int) -> bool:
         """Transactionally change the table's bucket layout — the
         maintenance op a day-one partition count needs when the table grows
         100x (at 100 TB you want thousands of buckets, not the 32 a pilot
         started with; Iceberg calls this partition-spec evolution).
 
-        One full LWW-reduced rewrite: read every generation, reduce to
-        winners (tombstones retained), hash into the NEW bucket space, and
-        publish a manifest that (a) replaces every old bucket's file list
-        and (b) carries the new ``n_buckets`` — so the layout flips at the
+        One full reduced rewrite: read every generation, reduce each key
+        under the table's merge rule (tombstones retained), hash into the
+        NEW bucket space, and publish a manifest that (a) replaces every
+        old bucket's file list and (b) carries the new ``n_buckets`` — so
+        the layout flips at the
         same atomic manifest rename as the data, and a crash anywhere
         leaves either the complete old table or the complete new one.
         ``_table.json`` is re-stamped after the publish; a crash in that
@@ -2224,14 +2279,8 @@ class SnapshotTable:
         df = self.read(spark)
         if df is None:
             return False
-        if key_reduce is None:
-            from .operators.upsert import last_writer_wins
-
-            def key_reduce(d):
-                tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                return last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
         old_n = self.n_buckets
-        reduced = key_reduce(df.drop(BUCKET_COL)).withColumn(
+        reduced = self._reduce(df.drop(BUCKET_COL)).withColumn(
             BUCKET_COL, bucket_expr(self.key_cols, new_n))
         self.n_buckets = new_n  # write path targets the new layout
         try:
@@ -2298,6 +2347,7 @@ class SnapshotTable:
         the floor for a content diff), then the standard delta commit.
         Returns {"restored", "changed", "version"}; a no-op diff commits
         nothing."""
+        self._require_lww("restore")
         from functools import reduce as _reduce
         from operator import and_ as _and
 
@@ -2406,6 +2456,7 @@ class SnapshotTable:
         Cost: one live read + filter + standard delta commit — O(live) scan
         floor (predicate pushdown and zone maps prune where they can), and
         the WRITE is O(matched rows). Returns {"deleted", "version"}."""
+        self._require_lww("delete_where")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         cur = self.read_live(spark, op_col=op_col)
         if cur is None:
@@ -2471,6 +2522,7 @@ class SnapshotTable:
         drop them first). Cost: O(affected buckets' state) — the matched
         keys' buckets only, manifest-pruned, keys broadcast into a
         left-anti join. Returns {"purged_keys", "buckets", "version"}."""
+        self._require_lww("purge_keys")
         staged = self.staged()
         if staged:
             raise ValueError(
@@ -2486,13 +2538,9 @@ class SnapshotTable:
                 r["__b"] for r in kdf.select(
                     bucket_expr(self.key_cols, self.n_buckets).alias("__b")
                 ).distinct().collect())
-            from .operators.upsert import last_writer_wins
-
             def reduce(d: DataFrame) -> DataFrame:
-                tiebreak = "event_id" if "event_id" in d.columns else "seq_no"
-                w = last_writer_wins(d, self.key_cols, tiebreak_col=tiebreak)
-                return w.join(F.broadcast(kdf), on=self.key_cols,
-                              how="left_anti")
+                return self._reduce(d).join(F.broadcast(kdf), on=self.key_cols,
+                                            how="left_anti")
 
             done = self.compact(spark, key_reduce=reduce, buckets=affected,
                                 lineage_extra={"purge_keys": n_keys})
@@ -2511,6 +2559,7 @@ class SnapshotTable:
         to ``purge_keys`` for erase-regardless-of-current-state. See
         ``purge_keys`` for the erasure protocol (delete_where → purge →
         vacuum) and its tag/WAP caveats."""
+        self._require_lww("purge_where")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         cur = self.read_live(spark, op_col=op_col)
         if cur is None:
@@ -2547,7 +2596,7 @@ class SnapshotTable:
                             n_buckets=state.get("n_buckets", self.n_buckets),
                             checkpoint_every=self.checkpoint_every,
                             stats_cols=self.stats_cols,
-                            bloom_cols=self.bloom_cols)
+                            bloom_cols=self.bloom_cols, merge=self.merge)
         if tgt._log_entries():
             raise RuntimeError(f"clone_to: target {tgt.root} is not empty")
         files_abs = {b: [str(self.root / f) for f in fs]
@@ -3104,6 +3153,7 @@ class SnapshotTable:
 
         Returns False (no-op) if ``batch_id`` was already committed.
         """
+        self._require_lww("commit_merged")
         if self.is_committed(batch_id):
             return False
         m = self._load_state()

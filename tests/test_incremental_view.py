@@ -1,7 +1,9 @@
 """Incremental materialized aggregate view (operators/incremental.py):
 fold-by-fold equality with full recomputation, exactly-once refresh,
-tombstoned groups, NULL-measure semantics, and the out-of-order poison
-case (a changed key whose final winner lives OUTSIDE the refreshed range).
+groups netting to zero, NULL-measure semantics, the out-of-order poison
+case (a changed key whose final winner lives OUTSIDE the refreshed range),
+compaction and rebucket of the view's sum table, and the refusal to open
+a view table written as last-writer-wins group rows.
 """
 
 from __future__ import annotations
@@ -81,7 +83,9 @@ def test_refresh_is_exactly_once_and_chunk_invariant(spark, tmpdir_path):
     assert not a2.refresh(spark)
 
 
-def test_group_count_zero_becomes_tombstone(spark, tmpdir_path):
+def test_group_netting_to_zero_is_absent(spark, tmpdir_path):
+    """A group whose +1 and -1 deltas net to zero reads as absent, and
+    compaction drops it from the view table's files."""
     tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=2)
     view = IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"],
                               sum_cols=["val"])
@@ -92,6 +96,12 @@ def test_group_count_zero_becomes_tombstone(spark, tmpdir_path):
     view.refresh(spark)
     got = _view_rows(spark, view)
     assert got == {("dup", 1, 2.0)}  # 'solo' group vanished, not n=0
+    # the two generations hold solo's +1 and its -1
+    assert sorted(r["n_rows"] for r in view.table.read(spark)
+                  .filter("grp = 'solo'").collect()) == [-1, 1]
+    assert view.table.compact(spark)
+    assert {r["grp"] for r in view.table.read(spark).collect()} == {"dup"}
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
 
 
 def test_all_null_measure_group_reads_null_sum(spark, tmpdir_path):
@@ -255,3 +265,26 @@ def test_views_compact_their_own_tables(spark, tmpdir_path):
     log = hist.read_log(spark).collect()
     assert {r["k"] for r in log} == {f"k{i}" for i in range(20)}
     assert len(log) == len(tbl.read_changes(spark, -1).collect())
+    assert any(d.get("compaction") for d in view.table.lineage_log().values())
+    # a rebucket sums every generation into the new layout
+    assert view.table.rebucket(spark, 8)
+    assert view.table.max_files_per_bucket() == 1
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+    _commit(spark, tbl, 12, [("k0", "g5", 3.0, 5000, "U"),
+                             ("k1", "g0", None, 5001, "D")])
+    assert view.refresh(spark)
+    assert _view_rows(spark, view) == _recompute(spark, tbl)
+
+
+def test_view_over_a_last_writer_wins_table_raises(spark, tmpdir_path):
+    """A view table written when a refresh stored whole group rows merges
+    last-writer-wins; summing those rows would count them again, so the
+    view refuses to open it."""
+    import pytest
+
+    tbl = SnapshotTable(f"{tmpdir_path}/src", ["k"], n_buckets=2)
+    old = SnapshotTable(f"{tmpdir_path}/view", ["grp"], n_buckets=2)
+    old.commit_delta_auto(spark.createDataFrame(
+        [("a", 1, 1, "U")], "grp string, n_rows long, seq_no long, op string"), 0)
+    with pytest.raises(ValueError, match="rebuild the view"):
+        IncrementalAggView(f"{tmpdir_path}/view", tbl, dims=["grp"])

@@ -24,13 +24,14 @@ from omop_meds_spark.table import (BUCKET_COL, SnapshotTable, bucket_expr,
 SCHEMA = "k string, grp string, val double, seq_no long, op string"
 
 # jobs of one fold over the fixture below (32 buckets, two generations),
-# as measured with the one-pass fold reading the recorded file schema; the
-# same fold took 13 with a schema-merge job per read, and the two-read fold
-# before it 21
-REFRESH_JOB_BUDGET = 10
-# jobs of a point lookup over two generations, as measured; 3 with a
-# schema-merge job per read
-LOOKUP_JOB_BUDGET = 2
+# as measured with the fold committed as a per-group delta generation;
+# 10 when it merged the delta into the view's current rows, 13 with a
+# schema-merge job per read, and 21 for the two-read fold before that
+REFRESH_JOB_BUDGET = 4
+# jobs of a point lookup over two generations, as measured with the
+# reduce in one partition; 2 when the reduce shuffled on the key, 3 with
+# a schema-merge job per read
+LOOKUP_JOB_BUDGET = 1
 
 
 def _jobs(spark, fn) -> tuple[object, list[str]]:

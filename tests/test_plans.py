@@ -32,9 +32,28 @@ def test_tpch_q5_broadcasts_and_pushdown(spark):
 
 def test_cdc_upsert_exactly_one_exchange(spark):
     plan = _plan(spark, "cdc_upsert_latest")
-    assert _exchanges(plan) == 1  # the LWW key hash; no sort, no window
+    assert _exchanges(plan) == 1  # the LWW key hash; no window
     assert "max_by" in plan
     assert "Window" not in plan and "NestedLoop" not in plan
+
+
+def test_lww_combines_below_its_one_key_exchange(spark):
+    """What the LWW kernel promises: ONE key exchange, with ONE partial
+    (map-side) ``max_by`` below it, so each map task ships at most one row
+    per key. Not promised: a sort-free plan (the struct-valued buffer is
+    not fixed-width, so both aggregates are ``SortAggregate``)."""
+    from omop_meds_spark.operators.upsert import last_writer_wins
+
+    batch = spark.createDataFrame(
+        [("r", f"p{i % 5}", i, f"e{i}", "U", "x" * 10) for i in range(50)],
+        "repo string, path string, seq_no long, event_id string, op string, "
+        "content string")
+    plan = (last_writer_wins(batch, ["repo", "path"])
+            ._jdf.queryExecution().executedPlan().toString())
+    assert _exchanges(plan) == 1
+    assert plan.count("partial_max_by") == 1
+    # the tree prints top-down: below the exchange is before it
+    assert plan.index("partial_max_by") > plan.index("Exchange hashpartitioning")
 
 
 def test_text_features_zero_exchanges(spark):

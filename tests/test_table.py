@@ -318,3 +318,70 @@ def test_commit_merged_over_a_spanning_delta_file(spark, tmpdir_path):
     m = t.latest()
     assert not any(BUCKETS_STAT in st for st in m["file_stats"].values())
     assert len(m["files"][str(b)]) == 1
+
+
+def test_sum_table_adds_generations(spark, tmpdir_path):
+    """A ``merge="sum"`` table adds a key's generations in reads, lookups,
+    compaction and rebucket — each sum keeps its column's type, and a key
+    whose sums are all zero drops out — against a dict oracle. The rule
+    survives reopen and clone; the last-writer-wins DML raises."""
+    import random
+    from decimal import Decimal
+
+    import pytest
+
+    schema = "k string, n long, amt decimal(28,4), seq_no long, op string"
+    t = SnapshotTable(f"{tmpdir_path}/t", ["k"], n_buckets=4, merge="sum")
+    rng = random.Random(3)
+    oracle: dict[str, list] = {}
+    batches = [[(f"k{k}", rng.choice([-1, 1, 2]),
+                 Decimal(rng.randint(-500, 500)) / 4) for k in rng.sample(range(12), 6)]
+               for _ in range(9)]
+    batches += [[("z", 1, Decimal("2.5"))], [("z", -1, Decimal("-2.5"))]]
+    for b, rows in enumerate(batches):
+        for k, n, amt in rows:
+            o = oracle.setdefault(k, [0, Decimal(0)])
+            o[0] += n
+            o[1] += amt
+        t.commit_delta_auto(spark.createDataFrame(
+            [(*r, b, "U") for r in rows], schema), b)
+    want = {k: tuple(v) for k, v in oracle.items() if v != [0, 0]}
+    assert "z" not in want
+
+    def live():
+        df = t.read_live(spark)
+        assert dict(df.dtypes) == {"k": "string", "n": "bigint",
+                                   "amt": "decimal(28,4)", "seq_no": "bigint",
+                                   "op": "string"}
+        return {r["k"]: (r["n"], r["amt"]) for r in df.collect()}
+
+    assert live() == want
+    for k in ("k0", "k5", "z"):
+        df = t.lookup(spark, {"k": k})
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert [(r["n"], r["amt"]) for r in df.collect()] == (
+            [want[k]] if k in want else [])
+    assert t.compact(spark)
+    # compaction leaves one row per key and drops the zero-sum key
+    raw = t.read(spark).collect()
+    assert sorted(r["k"] for r in raw) == sorted(want)
+    assert live() == want
+    again = SnapshotTable(f"{tmpdir_path}/t", ["k"])
+    assert again.merge == "sum"
+    with pytest.raises(ValueError, match="merge='sum'"):
+        SnapshotTable(f"{tmpdir_path}/t", ["k"], merge="lww")
+    assert t.rebucket(spark, 8)
+    assert live() == want
+    assert t.clone_to(f"{tmpdir_path}/c").merge == "sum"
+    v = t.version
+    bucketed = spark.createDataFrame([("k1", 1, Decimal(1), 99, "U")], schema
+                                     ).withColumn(BUCKET_COL, bucket_expr(["k"], 8))
+    for dml in (lambda: t.restore(spark, version=0),
+                lambda: t.delete_where(spark, "n > 0"),
+                lambda: t.purge_keys(spark, t.read_live(spark).select("k")),
+                lambda: t.purge_where(spark, "n > 0"),
+                lambda: t.commit_merged(bucketed, 99, [0], 99)):
+        with pytest.raises(ValueError, match="last-writer-wins"):
+            dml()
+    assert t.version == v and live() == want
